@@ -4,8 +4,14 @@
     spark-submit --py-files osse.zip crawl_main.py \
         --pages /data/pages --hostmeta /data/hostmeta \
         --seeds /data/seeds.parquet --workdir /data/crawlstate \
-        --rounds 10 [--budget 300] [--round-ms 600000] [--bloom] \
+        --rounds 10 [--budget 300] [--round-ms 600000] \
         [--compact-every 5]
+
+Each round checks its harvested links with one exact anti-join against
+the workdir's url_seen table; --compact-every folds the per-round
+url_seen deltas back into its bucketed base.  Each printed metrics line
+carries ``seen_path`` (``url_seen``, or ``requests_scan`` after a
+streaming ingest wrote requests between compactions).
 
 Packaging:  `python crawl_main.py --make-pyfiles osse.zip` zips the
 package for --py-files.  Resume is automatic: the driver continues from
@@ -46,11 +52,6 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=1)
     ap.add_argument("--budget", type=int, default=300)
     ap.add_argument("--round-ms", type=int, default=600_000)
-    ap.add_argument("--bloom", action="store_true")
-    ap.add_argument("--seen-filter", choices=["", "bloom", "cuckoo"],
-                    default="cuckoo", help="C5 routing pre-filter kind "
-                    "(cuckoo = deletable fingerprints, the proven "
-                    "persistent default; '' = plain exact anti-join)")
     ap.add_argument("--compact-every", type=int, default=5,
                     help="compact the frontier every N rounds (0 = "
                     "never) — compaction is what keeps the candidate "
@@ -76,9 +77,7 @@ def main() -> None:
     # under spark-submit the session is provided; standalone falls back
     # to local[*]
     spark = SparkSession.builder.getOrCreate()
-    cfg = CrawlConfig(budget=args.budget, round_ms=args.round_ms,
-                      use_bloom=args.bloom,
-                      seen_filter=args.seen_filter)
+    cfg = CrawlConfig(budget=args.budget, round_ms=args.round_ms)
     drv = CrawlDriver(spark, args.workdir, args.pages, args.hostmeta, cfg)
     if args.seeds:
         n = drv.seed(args.seeds)

@@ -34,29 +34,14 @@ def _gkeys(df):
         else ["uh48"]
 
 
-def _annihilate(df, negs, time_col: str):
-    """Physical negative-key removal at merge time (the Rdb negative-key
-    annihilation the reads apply logically — delete_urls docstring,
-    plans/scheduler.py): drop rows at or before their uh48's newest
-    negative.  Same rule as CrawlDriver._annihilate, applied here so a
-    compacted snapshot is READ-EQUIVALENT to the append log it replaces
-    (without it, the min-(hop,added) winner could be an annihilated row
-    while a surviving newer duplicate gets dropped)."""
-    n = negs.groupBy("uh48").agg(F.max("neg_time_ms").alias("_negt"))
-    return (df.join(F.broadcast(n), "uh48", "left")
-            .filter(F.col("_negt").isNull() |
-                    (F.col(time_col) > F.col("_negt")))
-            .drop("_negt"))
-
-
 def compact_replies(spark: SparkSession, table: SnapshotTable,
                     negs=None) -> int:
-    from ..sources.snapstore import with_salt
+    from ..sources.snapstore import annihilate, with_salt
     df = table.read(spark)
     if df is None:
         return 0
     if negs is not None:
-        df = _annihilate(df, negs, "spidered_time_ms")
+        df = annihilate(df, negs, "spidered_time_ms")
     df = with_salt(df)
     keys = _gkeys(df)
     others = [c for c in df.columns if c not in keys]
@@ -72,12 +57,12 @@ def compact_replies(spark: SparkSession, table: SnapshotTable,
 
 def compact_requests(spark: SparkSession, table: SnapshotTable,
                      negs=None) -> int:
-    from ..sources.snapstore import with_salt
+    from ..sources.snapstore import annihilate, with_salt
     df = table.read(spark)
     if df is None:
         return 0
     if negs is not None:
-        df = _annihilate(df, negs, "added_time_ms")
+        df = annihilate(df, negs, "added_time_ms")
     df = with_salt(df)
     keys = _gkeys(df)
     # OR-merge the sticky flags across duplicate requests
@@ -166,11 +151,15 @@ def compact_inlinks(spark: SparkSession, table: SnapshotTable,
 
 
 def compact_frontier(spark: SparkSession, workdir: str) -> dict:
-    import os
-
-    from ..sources.snapstore import frontier_table, url_seen_table
-    neg_t = SnapshotTable(os.path.join(workdir, "negatives"))
-    negs = neg_t.read(spark) if neg_t.exists() else None
+    from ..sources.snapstore import (
+        frontier_table, read_negatives, url_seen_table,
+    )
+    # negative keys are removed physically at merge time with the same
+    # annihilation rule the reads apply logically (snapstore.annihilate),
+    # so a compacted snapshot is READ-EQUIVALENT to the append log it
+    # replaces (without it, the min-(hop,added) winner could be an
+    # annihilated row while a surviving newer duplicate gets dropped)
+    negs = read_negatives(spark, workdir)
     req_t = frontier_table(workdir, "requests")
     n_req = compact_requests(spark, req_t, negs=negs)
     n_rep = compact_replies(spark, frontier_table(workdir, "replies"),

@@ -12,7 +12,7 @@ One scheduling round (SURVEY §3.1 restatement) =
         Spider.cpp:6758)
       → fetch = left join against pages (Msg13 simulated)
       → extract links/text (Arrow UDFs) → posexplode → new requests
-        (bloom + exact anti-join vs url_seen)
+        (exact anti-join vs the uh48-bucketed url_seen set)
       → append replies/requests, update ip_state, commit snapshot + metrics
 
 Scale design (10^10-URL frontier, 1000 executors):
@@ -50,7 +50,9 @@ from ..operators import budget as budget_ops
 from ..operators import windows as windows_ops
 from ..functions import udfs
 from ..oracle.crawler import CrawlConfig
-from ..sources.snapstore import SnapshotTable, with_salt
+from ..sources.snapstore import (
+    SnapshotTable, annihilate, read_negatives, with_salt,
+)
 
 
 def path_cgi_col(url):
@@ -126,17 +128,9 @@ class CrawlDriver:
         self.t_schedule = SnapshotTable(os.path.join(workdir, "schedule"))
         self.t_inlinks = frontier_table(workdir, "inlinks")
         self.t_metrics = SnapshotTable(os.path.join(workdir, "metrics"))
-        # H8 negative keys (Rdb annihilation) + the C5 cuckoo filter's
-        # persistent state: blobs live across rounds; the applied-
-        # negatives ledger makes filter deletion exactly-once (a
-        # replayed delete would evict a colliding fingerprint — ADVICE
-        # r4 #1)
+        # H8 negative keys (Rdb annihilation, snapstore.annihilate)
         self.t_negatives = SnapshotTable(
             os.path.join(workdir, "negatives"))
-        self.t_seen_filter = SnapshotTable(
-            os.path.join(workdir, "seen_filter"))
-        self.t_neg_applied = SnapshotTable(
-            os.path.join(workdir, "negatives_applied"))
         # C5 exact seen set, incremental (VERDICT r5 Wrong #2): its own
         # uh48-bucketed snapshot — base written at seed/compaction,
         # per-round new-key deltas appended in run_round.  Lineage pins
@@ -147,10 +141,6 @@ class CrawlDriver:
         from ..sources.snapstore import url_seen_table
         self.t_url_seen = url_seen_table(workdir)
         self.pages = spark.read.parquet(pages_path)
-        # one metadata-cheap probe at init (untimed setup): rounds over
-        # an empty pages table can never harvest, so they skip the
-        # per-round parents emptiness probe AND the seen-filter build
-        self._pages_has_rows = not self.pages.isEmpty()
         self.hostmeta = spark.read.parquet(hostmeta_path)
         # ONE init job: host count (broadcast size gate) + a robots
         # content fingerprint (cache-invalidation key, below)
@@ -362,10 +352,10 @@ class CrawlDriver:
         # Physical removal happens at compaction; until then the read
         # applies the annihilation logically, exactly like Rdb serving
         # reads over an unmerged negative key.
-        negs = self.read_negatives()
+        negs = read_negatives(self.spark, self.workdir)
         if negs is not None and requests is not None:
-            requests = self._annihilate(requests, negs, "added_time_ms")
-            replies = self._annihilate(replies, negs, "spidered_time_ms")
+            requests = annihilate(requests, negs, "added_time_ms")
+            replies = annihilate(replies, negs, "spidered_time_ms")
         return requests, replies, ip_state
 
     @staticmethod
@@ -389,31 +379,16 @@ class CrawlDriver:
                     .cast("int")))
         return df
 
-    def read_negatives(self) -> DataFrame | None:
-        if not self.t_negatives.exists():
-            return None
-        return self.t_negatives.read(self.spark)
-
-    @staticmethod
-    def _annihilate(df: DataFrame, negs: DataFrame,
-                    time_col: str) -> DataFrame:
-        """Drop rows at or before their uh48's newest negative key.
-        Negatives are operator/API-scale (delete_urls calls), never
-        frontier-scale, so the broadcast is safe."""
-        n = negs.groupBy("uh48").agg(F.max("neg_time_ms").alias("_negt"))
-        return (df.join(F.broadcast(n), "uh48", "left")
-                .filter(F.col("_negt").isNull() |
-                        (F.col(time_col) > F.col("_negt")))
-                .drop("_negt"))
-
     def delete_urls(self, urls: DataFrame,
                     at_ms: int | None = None) -> int:
         """Rdb negative-key API (SURVEY §2.H8; Msg4 delete /
         PageReindex force-delete analog): enqueue negative keys for the
-        given urls (column ``url``, or pre-hashed ``uh48``).  State
-        reads annihilate matching older records from the next round on;
-        the persistent cuckoo filter drops their fingerprints in place
-        (no rebuild); compaction removes them physically."""
+        given urls (column ``url``, or pre-hashed ``uh48``).  From the
+        next round on, state reads annihilate matching older records and
+        the round's exact url_seen anti-join no longer counts them as
+        seen, so a later harvested link re-enqueues them with a fresh
+        ``added_time_ms``; the streaming ingest's seen check applies the
+        same rule.  Compaction removes them physically."""
         if at_ms is None:
             at_ms = self.cfg.t0_ms + self.current_round() * \
                 self.cfg.round_ms
@@ -967,137 +942,12 @@ class CrawlDriver:
         if self._url_seen_synced():
             base, delta = self.t_url_seen.read_parts(self.spark)
             parts = [p for p in (base, delta) if p is not None]
-            negs = self.read_negatives()
+            negs = read_negatives(self.spark, self.workdir)
             if negs is not None:
-                parts = [self._annihilate(p, negs, "last_added_ms")
+                parts = [annihilate(p, negs, "last_added_ms")
                          for p in parts]
             return [p.select("uh48") for p in parts]
         return [requests.select("uh48")]
-
-    def _seen_keys(self, requests: DataFrame) -> DataFrame:
-        """Distinct seen keys — the (cold) bloom/cuckoo build source."""
-        parts = self._seen_parts(requests)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.distinct()
-
-    # ---- C5 persistent cuckoo state (VERDICT r4 Wrong #2) ------------
-    # The filter blobs are a snapshot table like any other crawl state:
-    # grown in place with each round's definitely-new keys
-    # (cuckoo_insert), shrunk in place by negative keys (cuckoo_delete),
-    # and rebuilt from the exact seen set ONLY when the requests table
-    # moved without a filter sync — which is exactly what a compaction
-    # rewrite or a mid-round crash looks like — or when a mutation's
-    # applied-count mismatches its request count (over-capacity insert,
-    # replayed/unknown delete).  Between rebuilds no round rescans the
-    # seen set: the 10^10-row rescan-per-round the r4 wiring paid is
-    # gone, which is the cuckoo's reason to exist over the bloom.
-
-    _FILTER_COLS = ("bucket", "n_buckets", "table")
-
-    def _filter_lineage(self) -> dict:
-        m = self.t_seen_filter.manifest()
-        return (m["snapshots"].get(str(m["current"]), {})
-                .get("lineage", {}))
-
-    def _persist_filter(self, filt: DataFrame, built_round: int,
-                        bits: int) -> DataFrame:
-        self.t_seen_filter.overwrite(
-            filt.select(*self._FILTER_COLS),
-            {"bits": bits, "built_round": built_round,
-             "synced_requests_snapshot":
-                 self.t_requests.current_snapshot()})
-        return self.t_seen_filter.read(self.spark)
-
-    def _cuckoo_rebuild(self, seen: DataFrame, rnd: int,
-                        bits: int) -> DataFrame:
-        from ..operators.cuckoo import build_cuckoo
-        filt = self._persist_filter(
-            build_cuckoo(seen, partition_bits=bits), rnd, bits)
-        # the rebuild source is the post-annihilation seen set, so every
-        # negative so far is incorporated — ledger resets to all of them
-        negs = self.read_negatives()
-        if negs is not None:
-            self.t_neg_applied.overwrite(negs.select("uh48").distinct(),
-                                         {"reset_at_round": rnd})
-        return filt
-
-    def _mutation_counts(self, res: DataFrame) -> tuple[int, int]:
-        row = res.agg(
-            F.coalesce(F.sum("n_requested"), F.lit(0)).alias("rq"),
-            F.coalesce(F.sum("n_applied"), F.lit(0)).alias("ap")
-        ).collect()[0]
-        return int(row.rq), int(row.ap)
-
-    def _cuckoo_filter(self, seen: DataFrame, rnd: int,
-                       bits: int) -> DataFrame:
-        cfg = self.cfg
-        from ..operators.cuckoo import build_cuckoo, cuckoo_delete
-        if not getattr(cfg, "seen_filter_persist", True):
-            return build_cuckoo(seen, partition_bits=bits)
-        lin = self._filter_lineage()
-        synced = (self.t_seen_filter.exists() and
-                  lin.get("bits") == bits and
-                  lin.get("synced_requests_snapshot") ==
-                  self.t_requests.current_snapshot())
-        if not synced:
-            return self._cuckoo_rebuild(seen, rnd, bits)
-        filt = self.t_seen_filter.read(self.spark)
-        negs = self.read_negatives()
-        if negs is None:
-            return filt
-        # exactly-once deletion (ADVICE r4 #1): the ledger screens out
-        # already-applied negatives; the raw-log semi-join screens out
-        # never-inserted keys.  A re-added-then-re-deleted url stays
-        # screened by the ledger — its fingerprint lingers, which only
-        # routes it through the exact check (safe direction).
-        pending = negs.select("uh48").distinct()
-        applied = self.t_neg_applied.read(self.spark)
-        if applied is not None:
-            pending = pending.join(applied, "uh48", "left_anti")
-        if pending.isEmpty():
-            return filt
-        raw = self.t_requests.read(self.spark).select("uh48")
-        confirmed = pending.join(raw, "uh48", "left_semi")
-        res = cuckoo_delete(filt, confirmed, partition_bits=bits) \
-            .persist()
-        rq, ap = self._mutation_counts(res)
-        if rq != ap:
-            res.unpersist()
-            return self._cuckoo_rebuild(seen, rnd, bits)
-        # ledger FIRST (ADVICE r5 #2): a crash between the two commits
-        # then leaves only lingering fingerprints — the safe direction
-        # (extra exact-check routing) — instead of a replayable delete
-        # that could evict a colliding stored key's fingerprint.
-        self.t_neg_applied.append(pending, {"round": rnd})
-        filt = self._persist_filter(res, lin.get("built_round", rnd),
-                                    bits)
-        res.unpersist()
-        return filt
-
-    def _cuckoo_sync_inserts(self, new_uh48: DataFrame, rnd: int,
-                             bits: int) -> None:
-        """Grow the persisted filter with this round's definitely-new
-        keys (exactly-once: they survived the exact anti-join, so they
-        were never inserted).  Runs AFTER the requests append so the
-        recorded synced snapshot covers the new rows; a crash in
-        between leaves the lineage stale → next round rebuilds."""
-        from ..operators.cuckoo import cuckoo_insert
-        filt = self.t_seen_filter.read(self.spark)
-        res = cuckoo_insert(filt, new_uh48, partition_bits=bits) \
-            .persist()
-        rq, ap = self._mutation_counts(res)
-        if rq == ap:
-            self._persist_filter(
-                res, self._filter_lineage().get("built_round", rnd),
-                bits)
-        else:
-            # over capacity: rebuild from the exact (now post-append)
-            # post-annihilation seen set
-            requests, _, _ = self._read_state()
-            self._cuckoo_rebuild(self._seen_keys(requests), rnd, bits)
-        res.unpersist()
 
     # ------------------------------------------------------------------
     def run_round(self, rnd: int) -> dict:
@@ -1252,64 +1102,22 @@ class CrawlDriver:
             .dropDuplicates(["uh48", "parent_cblock"])
         )
 
-        # dedup within batch: first discovery in (parent seq, link order)
+        # dedup within batch: first discovery in (parent seq, link order),
+        # then the exact seen check (the reference's spiderdb lookup on
+        # getUrlHash48): one anti-join per seen part.  Synced, the parts
+        # are the incremental url_seen table (bucketed base + small
+        # deltas — no frontier-wide distinct, no uh48 exchange of the
+        # seen side); after an out-of-band requests write they are the
+        # requests scan until the next compaction rebuilds the base.
         w_new = Window.partitionBy("uh48").orderBy("seq", "link_idx")
-        # exact-confirm side: the incremental url_seen table when synced
-        # (bucketed base + small deltas — no frontier-wide distinct, no
-        # uh48 exchange of the seen side), else the requests scan
-        seen_parts = self._seen_parts(requests)
+        seen_synced = self._url_seen_synced()
         deduped = (
             exploded
             .withColumn("_rn", F.row_number().over(w_new))
             .filter(F.col("_rn") == 1)
         )
-        seen_kind = getattr(cfg, "seen_filter", "") or \
-            ("bloom" if getattr(cfg, "use_bloom", False) else "")
-        # the routing filter only earns its build when there are links
-        # to route: a round with no harvestable parents (empty pages
-        # table, harvest_links off everywhere) must not pay a filter
-        # build/sync job.  An empty pages table is decided once at init;
-        # otherwise parents is pinned-backed, so the emptiness probe
-        # materializes work the stats job needs anyway.
-        if seen_kind and (not self._pages_has_rows or
-                          parents.isEmpty()):
-            seen_kind = ""
-        if seen_kind:
-            # C5 pre-filter: definitely-new urls skip the (large) exact
-            # anti-join shuffle; maybe-seen go through it. Routing only —
-            # the final membership decision is always exact, so
-            # crawl-order parity is unaffected.  "bloom" = bitmap
-            # (urlseen.py, rebuilt per round — bitmaps can't forget);
-            # "cuckoo" = persistent fingerprint table (cuckoo.py) that
-            # grows/shrinks in place across rounds.  Probe plan: blobs
-            # broadcast + mapInPandas while small, cogroup otherwise —
-            # never joined per candidate row (VERDICT r4 Wrong #1).
-            bits = getattr(cfg, "seen_filter_bits", 6)
-            mode = getattr(cfg, "seen_filter_mode", "auto")
-            if seen_kind == "cuckoo":
-                from ..operators.cuckoo import cuckoo_maybe_seen
-                filt = self._cuckoo_filter(self._seen_keys(requests),
-                                           rnd, bits)
-                routed = cuckoo_maybe_seen(deduped, filt,
-                                           partition_bits=bits,
-                                           mode=mode)
-            else:
-                from ..operators.urlseen import (
-                    bloom_maybe_seen, build_bloom,
-                )
-                bloom = build_bloom(self._seen_keys(requests),
-                                    bucket_bits=bits)
-                routed = bloom_maybe_seen(deduped, bloom,
-                                          bucket_bits=bits, mode=mode)
-            definitely_new = routed.filter(~F.col("maybe_seen")) \
-                .drop("maybe_seen")
-            maybe = routed.filter(F.col("maybe_seen")).drop("maybe_seen")
-            for p in seen_parts:
-                maybe = maybe.join(p, "uh48", "left_anti")
-            deduped = definitely_new.unionByName(maybe)
-        else:
-            for p in seen_parts:
-                deduped = deduped.join(p, "uh48", "left_anti")
+        for p in self._seen_parts(requests):
+            deduped = deduped.join(p, "uh48", "left_anti")
         new_requests = (
             deduped
             .join(self._bcast_hosts(
@@ -1386,8 +1194,8 @@ class CrawlDriver:
         # all read from pinned intermediates — submit them from a small
         # thread pool so their write jobs back-fill each other's task
         # tails (guide §2.6) instead of paying four sequential job
-        # latencies.  Only the url_seen/cuckoo syncs order AFTER the
-        # requests append (their lineage pins its snapshot id).
+        # latencies.  Only the url_seen sync orders AFTER the requests
+        # append (its lineage pins the requests snapshot id).
         def _commit_replies():
             self.t_replies.append(with_salt(new_replies),
                                   {"round": rnd, "rows": n_sched})
@@ -1400,11 +1208,10 @@ class CrawlDriver:
         def _commit_requests():
             if n_new <= 0:
                 return
-            seen_was_synced = self._url_seen_synced()
             self.t_requests.append(
                 with_salt(new_requests.drop("parent_uh48")),
                 {"round": rnd, "rows": n_new})
-            if seen_was_synced:
+            if seen_synced:
                 # mirror the append: exactly the definitely-new keys
                 # (they survived the exact anti-join) extend the seen
                 # table, keeping it synced with the new snapshot
@@ -1415,12 +1222,6 @@ class CrawlDriver:
                     {"round": rnd, "rows": n_new,
                      "synced_requests_snapshot":
                          self.t_requests.current_snapshot()})
-            if seen_kind == "cuckoo" and \
-                    getattr(cfg, "seen_filter_persist", True) and \
-                    self.t_seen_filter.exists():
-                self._cuckoo_sync_inserts(
-                    new_requests.select("uh48").distinct(), rnd,
-                    getattr(cfg, "seen_filter_bits", 6))
 
         def _commit_ip_state():
             # ip_state merge (overwrite small table); emptiness from
@@ -1455,8 +1256,13 @@ class CrawlDriver:
             for fu in futs:
                 fu.result()
 
+        # seen_path: which relation the exact seen check anti-joined —
+        # "requests_scan" marks a round that ran after an out-of-band
+        # requests write (streaming ingest, state injection)
         metrics = dict(round=rnd, scheduled=int(n_sched), fetched_ok=n_ok,
-                       fetch_errors=n_err, new_urls=int(n_new))
+                       fetch_errors=n_err, new_urls=int(n_new),
+                       seen_path="url_seen" if seen_synced
+                       else "requests_scan")
         # 1-row driver-side record: pyarrow write, no Spark job
         import pyarrow as pa
         self.t_metrics.append_rows(
@@ -1464,7 +1270,8 @@ class CrawlDriver:
             pa.schema([("round", pa.int32()), ("scheduled", pa.int64()),
                        ("fetched_ok", pa.int64()),
                        ("fetch_errors", pa.int64()),
-                       ("new_urls", pa.int64())]),
+                       ("new_urls", pa.int64()),
+                       ("seen_path", pa.string())]),
             metrics)
         for p in pins:
             p.unpersist()

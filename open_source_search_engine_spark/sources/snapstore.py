@@ -96,6 +96,30 @@ def url_seen_table(workdir: str) -> "SnapshotTable":
                          sort_by=["uh48"])
 
 
+def read_negatives(spark: SparkSession, workdir: str) -> DataFrame | None:
+    """The H8 negative-key log (uh48, neg_time_ms) written by
+    ``CrawlDriver.delete_urls``, or None when no url was ever deleted —
+    decided from the manifest, so the common case costs no Spark job."""
+    t = SnapshotTable(os.path.join(workdir, "negatives"))
+    return t.read(spark) if t.exists() else None
+
+
+def annihilate(df: DataFrame, negs: DataFrame, time_col: str) -> DataFrame:
+    """Rdb negative-key annihilation: drop rows at or before their uh48's
+    newest negative key.  Records added after the negative survive, so a
+    deleted-then-rediscovered url is seen (and crawls) afresh.  Every
+    reader of frontier state applies this one rule — the round's state
+    read and seen set, the streaming seen check, and compaction (which
+    applies it physically).  Negatives are operator/API-scale, never
+    frontier-scale, so the broadcast is safe."""
+    from pyspark.sql import functions as F
+    n = negs.groupBy("uh48").agg(F.max("neg_time_ms").alias("_negt"))
+    return (df.join(F.broadcast(n), "uh48", "left")
+            .filter(F.col("_negt").isNull() |
+                    (F.col(time_col) > F.col("_negt")))
+            .drop("_negt"))
+
+
 class SnapshotTable:
     """``bucket_by=(cols, n)`` declares the table's storage clustering
     (Iceberg's ``bucket(n, col)`` partition transform; spiderdb's
@@ -189,6 +213,15 @@ class SnapshotTable:
             df.write.mode("overwrite").parquet(out)
         # per-partition lineage: parquet files + row counts per file
         files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        if not files:
+            # a bucketed write of zero rows (e.g. a compaction after every
+            # row was deleted) leaves no file; keep one empty bucket-0
+            # file so every reader finds the schema in its footer
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import to_arrow_schema
+            files = ["part-00000-empty_00000.c000.parquet"]
+            pq.write_table(to_arrow_schema(df.schema).empty_table(),
+                           os.path.join(out, files[0]))
         lineage = {"files": len(files)}
         if bucketed and self.bucket_by is not None:
             spec = {"cols": self.bucket_by[0], "n": self.bucket_by[1],

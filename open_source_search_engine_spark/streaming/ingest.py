@@ -101,7 +101,9 @@ def run_seed_ingest(spark: SparkSession, seed_dir: str, hostmeta_path: str,
     # the canonical frontier constructor: streaming appends are plain
     # parquet deltas either way (bucketing re-established at compaction),
     # but the spec must agree with the batch scheduler's
-    from ..sources.snapstore import frontier_table
+    from ..sources.snapstore import (
+        annihilate, frontier_table, read_negatives,
+    )
     table = frontier_table(workdir, "requests")
     stream = to_requests(seed_stream(spark, seed_dir), hostmeta,
                          n_hosts=n_hosts)
@@ -116,7 +118,10 @@ def run_seed_ingest(spark: SparkSession, seed_dir: str, hostmeta_path: str,
     # ~2^-13 fingerprint collision), so a busy fresh-seed feed never
     # rescans the frontier.  Routing-only: membership decisions stay
     # exact.  Lineage records `frontier_scanned` per commit so tests —
-    # and operators — can see the scans that did happen.
+    # and operators — can see the scans that did happen.  Both the build
+    # and the exact check read the requests the round's seen set reads:
+    # negative keys (delete_urls) annihilate older rows first, so a
+    # deleted url fed again after its delete is accepted afresh.
     bits = 6
     _state: dict = {"filt": None}
 
@@ -128,9 +133,17 @@ def run_seed_ingest(spark: SparkSession, seed_dir: str, hostmeta_path: str,
         c.count()
         return c
 
+    def _seen_requests(sess: SparkSession) -> DataFrame | None:
+        existing = table.read(sess)
+        # the negatives manifest decides: no deletes, no extra job
+        negs = read_negatives(sess, workdir)
+        if existing is None or negs is None:
+            return existing
+        return annihilate(existing, negs, "added_time_ms")
+
     def _init_filter(sess: SparkSession) -> DataFrame:
         from ..operators.cuckoo import build_cuckoo
-        existing = table.read(sess)
+        existing = _seen_requests(sess)
         seen = existing.select("uh48").distinct() if existing is not None \
             else sess.createDataFrame([], "uh48 long")
         return _materialize(build_cuckoo(seen, partition_bits=bits))
@@ -151,7 +164,7 @@ def run_seed_ingest(spark: SparkSession, seed_dir: str, hostmeta_path: str,
         scanned = False
         if not maybe.isEmpty():
             scanned = True
-            existing = table.read(sess)
+            existing = _seen_requests(sess)
             if existing is not None:
                 maybe = maybe.join(existing.select("uh48").distinct(),
                                    "uh48", "left_anti")

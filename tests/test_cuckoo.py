@@ -84,31 +84,6 @@ def test_over_capacity_raises():
         C._build_table(keys, nb)
 
 
-def test_cuckoo_routing_is_parity_neutral(spark, tmp_path):
-    """Cuckoo-routed URL-seen must not change the crawl (routing-only) —
-    the cuckoo mirror of test_bloom_parity.py."""
-    from open_source_search_engine_spark.oracle.crawler import CrawlConfig
-    from open_source_search_engine_spark.plans.scheduler import CrawlDriver
-    from open_source_search_engine_spark.sources import synthweb
-
-    d = str(tmp_path / "corpus")
-    paths = synthweb.write_corpus(d, n_hosts=6, mean_pages=4, n_seeds=3)
-
-    def run(kind, wd):
-        cfg = CrawlConfig(rounds=3, budget=40, seen_filter=kind)
-        drv = CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"],
-                          cfg)
-        drv.seed(paths["seeds"])
-        drv.run(3)
-        return [(r.round, r.seq, r.url) for r in
-                drv.schedule_df().orderBy("round", "seq").collect()]
-
-    plain = run("", str(tmp_path / "plain"))
-    cuckooed = run("cuckoo", str(tmp_path / "cuckoo"))
-    assert plain == cuckooed
-    assert len(plain) > 0
-
-
 @pytest.mark.usefixtures("spark")
 def test_spark_roundtrip_and_delete(spark):
     from pyspark.sql import functions as F
@@ -139,49 +114,3 @@ def test_spark_roundtrip_and_delete(spark):
         .filter("maybe_seen").count()
     assert ok == n_surv
     filt.unpersist()
-
-
-def test_persistent_filter_reuse_delete_parity(spark, tmp_path):
-    """VERDICT r4 Wrong #2 closure: with seen_filter_persist=True the
-    filter blobs are snapshot state — rounds after the first REUSE and
-    mutate them in place (grown by cuckoo_insert at commit, shrunk by
-    cuckoo_delete for negative keys) with NO rebuild — and the schedule
-    is identical to the rebuild-every-round wiring and to the plain
-    exact-only path, deletes included (routing-only contract)."""
-    from open_source_search_engine_spark.oracle.crawler import CrawlConfig
-    from open_source_search_engine_spark.plans.scheduler import CrawlDriver
-    from open_source_search_engine_spark.sources import synthweb
-
-    d = str(tmp_path / "corpus")
-    paths = synthweb.write_corpus(d, n_hosts=6, mean_pages=4, n_seeds=3)
-
-    def run(wd, **cfg_kw):
-        cfg = CrawlConfig(rounds=4, budget=40, **cfg_kw)
-        drv = CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"],
-                          cfg)
-        drv.seed(paths["seeds"])
-        drv.run(2)
-        # H8 mid-crawl negatives: drop two round-1 scheduled urls; they
-        # leave the seen set (and the persistent filter, in place)
-        victims = (drv.schedule_df().filter("round = 1")
-                   .select("url").orderBy("url").limit(2))
-        assert drv.delete_urls(victims) == 2
-        drv.run(2)
-        sched = [(r.round, r.seq, r.url) for r in
-                 drv.schedule_df().orderBy("round", "seq").collect()]
-        return drv, sched
-
-    drv_p, persisted = run(str(tmp_path / "persist"),
-                           seen_filter="cuckoo", seen_filter_persist=True)
-    _, rebuilt = run(str(tmp_path / "rebuild"),
-                     seen_filter="cuckoo", seen_filter_persist=False)
-    _, exact = run(str(tmp_path / "exact"))
-
-    assert persisted == rebuilt == exact and len(persisted) > 0
-    # the persisted run never rebuilt after round 0: built_round pinned
-    lin = drv_p._filter_lineage()
-    assert lin.get("built_round") == 0, lin
-    # and the deletes were applied to the blobs in place (ledger holds
-    # exactly the two negative keys)
-    applied = drv_p.t_neg_applied.read(spark)
-    assert applied is not None and applied.count() == 2

@@ -1,4 +1,4 @@
-"""Operator-level tests: dedup family, similarity, bloom url-seen,
+"""Operator-level tests: dedup family, similarity,
 budget band-pruning, compaction, windows."""
 
 import pytest
@@ -81,25 +81,6 @@ def test_brute_force_vs_lsh_ann(spark):
     for qid, vid in ann1.items():
         assert vid in {r.vec_id for r in exact.filter(
             f"qid = {qid}").collect()} or vid != top1[qid]
-
-
-def test_bloom_urlseen_roundtrip(spark):
-    from open_source_search_engine_spark.operators.urlseen import (
-        bloom_maybe_seen, build_bloom,
-    )
-    seen = spark.range(0, 2000).select(
-        (F.xxhash64("id") % F.lit(1 << 48)).alias("uh48"))
-    seen = seen.select(F.abs("uh48").alias("uh48"))
-    bloom = build_bloom(seen, bucket_bits=4)
-    # all seen keys must be maybe_seen (no false negatives)
-    tested = bloom_maybe_seen(seen, bloom, bucket_bits=4)
-    assert tested.filter(~F.col("maybe_seen")).count() == 0
-    # fresh keys mostly not flagged
-    fresh = spark.range(100000, 102000).select(
-        F.abs(F.xxhash64("id") % F.lit(1 << 48)).alias("uh48"))
-    flagged = bloom_maybe_seen(fresh, bloom, bucket_bits=4) \
-        .filter("maybe_seen").count()
-    assert flagged < 100  # fp rate well under 5%
 
 
 def test_budget_band_pruning(spark):

@@ -130,11 +130,10 @@ def test_round_job_count_bounded(driver):
     driver.run_round(0)
     after = set(tracker.getJobIdsForGroup("crawl-round-0") or [])
     n_jobs = len(after - before)
-    # r6 default config additionally runs: the parents emptiness probe,
-    # the persistent-cuckoo build + mutation-count + sync-insert jobs
-    # (seen_filter now defaults to "cuckoo") and the url_seen delta
-    # append — measured ~68 with AQE stage-jobs; guard at 85.
-    assert 0 < n_jobs <= 85, f"round fired {n_jobs} jobs"
+    # new links take one exact anti-join against url_seen, plus the
+    # url_seen delta append — measured 39 with AQE stage-jobs; guard
+    # at 45.
+    assert 0 < n_jobs <= 45, f"round fired {n_jobs} jobs"
 
 
 def test_path_cgi_col_matches_kernel(spark, driver):

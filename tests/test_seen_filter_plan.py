@@ -1,4 +1,4 @@
-"""Plan-shape gate for the C5 URL-seen pre-filter (bloom + cuckoo).
+"""Plan-shape gate for the streaming ingest's cuckoo seen-filter probe.
 
 The scale contract (VERDICT r4 Wrong #1 closure): probing the filter
 must never replicate the blob onto candidate rows and must never cap
@@ -10,8 +10,8 @@ parallelism at 2^bits tasks.
 - cogroup mode: exchanges exist (group candidates + blobs by bucket)
   but no Exchange input carries a binary blob column — each blob
   crosses the wire once per bucket-group, never once per row.
-- both modes produce identical routing bits (and auto resolves to
-  broadcast at the default geometry: 64 x 128 KiB = 8 MiB blobs).
+- both modes produce identical routing bits, and auto resolves to
+  broadcast while the blobs are small.
 """
 
 import re
@@ -20,7 +20,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from open_source_search_engine_spark.operators import cuckoo as C
-from open_source_search_engine_spark.operators import urlseen as U
 
 N_PART = 8
 
@@ -36,11 +35,10 @@ def state(spark):
     # overlap [10k, 20k) is seen; [20k, 30k) is fresh; N_PART input
     # partitions with no repartition so the probe plan starts clean
     cands = _uh48(spark.range(10_000, 30_000, 1, N_PART))
-    bloom = U.build_bloom(seen, bucket_bits=3).cache()
     ck = C.build_cuckoo(seen, partition_bits=3).cache()
-    bloom.count(), ck.count()
-    yield seen, cands, bloom, ck
-    bloom.unpersist(), ck.unpersist()
+    ck.count()
+    yield seen, cands, ck
+    ck.unpersist()
 
 
 def _formatted(df):
@@ -54,21 +52,8 @@ def _exchange_inputs(df) -> list[str]:
         r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]", _formatted(df))
 
 
-def test_bloom_broadcast_probe_has_no_exchange(state):
-    _, cands, bloom, _ = state
-    routed = U.bloom_maybe_seen(cands, bloom, bucket_bits=3,
-                                mode="broadcast")
-    plan = _formatted(routed)
-    assert "Exchange" not in plan, plan
-    # task count tracks candidate partitioning (not 2^bits)
-    assert routed.rdd.getNumPartitions() == N_PART
-    # no false negatives on the seen overlap
-    assert routed.filter((F.col("uh48").isNotNull()) &
-                         ~F.col("maybe_seen")).count() <= 10_000
-
-
 def test_cuckoo_broadcast_probe_has_no_exchange(state):
-    _, cands, _, ck = state
+    _, cands, ck = state
     routed = C.cuckoo_maybe_seen(cands, ck, partition_bits=3,
                                  mode="broadcast")
     plan = _formatted(routed)
@@ -82,34 +67,30 @@ def test_cogroup_probe_never_rides_blob_on_candidate_rows(state):
     row.  Cogroup keeps the sides separate: the candidate exchange
     carries only candidate columns; a blob column may appear only in
     the tiny filter-side exchange (2^bits rows, one blob each)."""
-    _, cands, bloom, ck = state
-    for routed in (
-        U.bloom_maybe_seen(cands, bloom, bucket_bits=3, mode="cogroup"),
-        C.cuckoo_maybe_seen(cands, ck, partition_bits=3, mode="cogroup"),
-    ):
-        inputs = _exchange_inputs(routed)
-        assert inputs, "cogroup plan should shuffle by bucket"
-        for cols in inputs:
-            has_blob = "bitmap" in cols or "table#" in cols
-            assert not (has_blob and "uh48" in cols), cols
+    _, cands, ck = state
+    routed = C.cuckoo_maybe_seen(cands, ck, partition_bits=3,
+                                 mode="cogroup")
+    inputs = _exchange_inputs(routed)
+    assert inputs, "cogroup plan should shuffle by bucket"
+    for cols in inputs:
+        has_blob = "table#" in cols
+        assert not (has_blob and "uh48" in cols), cols
 
 
 def test_modes_agree_bitwise(state):
-    _, cands, bloom, ck = state
+    _, cands, ck = state
 
     def bits(df):
         return sorted((r.uh48, r.maybe_seen) for r in df.collect())
 
-    assert bits(U.bloom_maybe_seen(cands, bloom, 3, mode="broadcast")) \
-        == bits(U.bloom_maybe_seen(cands, bloom, 3, mode="cogroup"))
     assert bits(C.cuckoo_maybe_seen(cands, ck, 3, mode="broadcast")) \
         == bits(C.cuckoo_maybe_seen(cands, ck, 3, mode="cogroup"))
 
 
 def test_auto_broadcasts_at_default_geometry(state):
-    """auto = broadcast while total blob bytes fit the budget: the
-    default 2^6 x 128 KiB bloom is 8 MiB, far under 256 MiB — so the
-    default crawl path takes the exchange-free plan."""
-    _, cands, bloom, _ = state
-    routed = U.bloom_maybe_seen(cands, bloom, bucket_bits=3, mode="auto")
+    """auto = broadcast while total blob bytes fit the budget: a
+    20k-key filter is far under the default blob budget — so the probe
+    takes the exchange-free plan."""
+    _, cands, ck = state
+    routed = C.cuckoo_maybe_seen(cands, ck, partition_bits=3, mode="auto")
     assert "Exchange" not in _formatted(routed)
