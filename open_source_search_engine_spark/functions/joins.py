@@ -71,16 +71,13 @@ def broadcast_if_small(
     df: DataFrame,
     n_rows: int | None,
     max_bytes: int = DEFAULT_BROADCAST_MAX_BYTES,
-    max_rows: int | None = None,
 ) -> DataFrame:
     """Attach a broadcast hint only when the estimated materialized size
-    (n_rows × schema-estimated row width) fits `max_bytes` (and the
-    optional row cap).  Unknown row count ⇒ NO hint: Spark/AQE decide by
-    measured size, which can only broadcast something that actually fits.
+    (n_rows × schema-estimated row width) fits `max_bytes`.  Unknown row
+    count ⇒ NO hint: Spark/AQE decide by measured size, which can only
+    broadcast something that actually fits.
     """
     if n_rows is None:
-        return df
-    if max_rows is not None and n_rows > max_rows:
         return df
     if estimated_broadcast_bytes(df, n_rows) > max_bytes:
         return df

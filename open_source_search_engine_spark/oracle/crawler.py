@@ -71,19 +71,13 @@ class CrawlConfig:
     # in-flight slots (Spider.cpp:9254), batch-modeled as
     # max_spiders * ceil(round_ms/duration) schedulable per rule per round.
     fetch_duration_ms: int = 0
-    # hot-IP skew mitigation: >0 enables the exact two-phase salted
-    # winner top-K in the Spark scheduler (parity-neutral — the global
-    # per-IP top-K survives any salt split; the oracle is unaffected)
-    winner_salt_buckets: int = 0
     # Spark-only, parity-neutral: host-keyed tables (hostmeta, parsed
-    # robots rules) are broadcast ONLY while their estimated bytes
-    # (|hosts| × schema-estimated row width, functions/joins.py) fit
-    # broadcast_host_max_bytes AND |hosts| is at or below the row cap;
-    # above either they go through ordinary shuffle joins (at the
-    # 10^10-URL design point hostmeta is 10^7-10^9 hosts — a forced
-    # broadcast would be a multi-GB driver OOM).  AQE may still pick a
-    # broadcast by measured size on the shuffle path.
-    broadcast_host_threshold: int = 10_000_000
+    # robots rules, ip_state) are broadcast ONLY while their estimated
+    # bytes (|hosts| × schema-estimated row width, functions/joins.py)
+    # fit broadcast_host_max_bytes; above it they go through ordinary
+    # shuffle joins (at the 10^10-URL design point hostmeta is 10^7-10^9
+    # hosts — a forced broadcast would be a multi-GB driver OOM).  AQE
+    # may still pick a broadcast by measured size on the shuffle path.
     broadcast_host_max_bytes: int = 128 * 1024 * 1024
 
 
@@ -168,8 +162,7 @@ class OracleCrawler:
         self.hostmeta = {r.host: r for r in hostmeta.itertuples()}
         self.state = OracleState()
         self._robots_cache: dict[str, tuple[str, int]] = {}
-        self.site_list = sitelist.parse(
-            getattr(self.cfg, "site_list", ""))
+        self.site_list = sitelist.parse(self.cfg.site_list)
         self._rule_kws = set()
         for r in self.cfg.rules:
             for t in urlfilter.parse_expression(r.expression):
@@ -336,7 +329,7 @@ class OracleCrawler:
         # 6-7. winners + spacing (+ D6 per-IP concurrency cap when a fetch
         # duration is modeled: start_j >= start_{j-k} + d for k =
         # ip_max_spiders, Spider.cpp:6084-6242)
-        d = getattr(cfg, "fetch_duration_ms", 0)
+        d = cfg.fetch_duration_ms
         candidates = []
         for ip, rows in per_ip.items():
             rows.sort(key=lambda t: (-t[0], t[1], t[2], t[3]))

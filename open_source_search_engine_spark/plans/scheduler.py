@@ -20,11 +20,12 @@ Scale design (10^10-URL frontier, 1000 executors):
   then re-shuffled once on first_ip for the politeness/winner stage — the
   same two partitionings the reference bakes into spiderdb's key layout
   (<firstIp><uh48>, Spider.h:370).
-- hostmeta / parsed-robots joins broadcast only while |hosts| ≤
-  cfg.broadcast_host_threshold (counted once at init); beyond that they
-  are ordinary host-keyed shuffle joins (AQE may still choose a
-  broadcast by measured size).  At 10^7-10^9 hosts a forced broadcast
-  is a driver OOM, so the hint is size-gated, never unconditional.
+- hostmeta / parsed-robots joins broadcast only while |hosts| × the
+  schema-estimated row width fits cfg.broadcast_host_max_bytes (|hosts|
+  counted once at init); beyond that they are ordinary host-keyed
+  shuffle joins (AQE may still choose a broadcast by measured size).
+  At 10^7-10^9 hosts a forced broadcast is a driver OOM, so the hint is
+  size-gated, never unconditional.
 - the hot-IP skew the reference suffers (one host per IP, Spider.cpp:6171)
   is bounded here: the per-IP window ranks at most the requests of one IP
   partition, and AQE skew-split handles oversized partitions for the scan/
@@ -151,8 +152,7 @@ class CrawlDriver:
                 F.coalesce(F.col("robots_status").cast("int"),
                            F.lit(404)))).alias("fp")).collect()[0]
         self._n_hosts = row.n
-        self.site_list = sitelist_mod.parse(
-            getattr(self.cfg, "site_list", ""))
+        self.site_list = sitelist_mod.parse(self.cfg.site_list)
         self._rule_kws = Fc.used_keywords(self.cfg.rules)
         # robots cache: parse robots.txt ONCE per host into an effective
         # Disallow-prefix table (the reference's 24h per-host robots cache,
@@ -193,13 +193,9 @@ class CrawlDriver:
         BYTES (rows × schema-estimated width, functions/joins.py) fit the
         driver budget — a row-count gate alone under-counts fat schemas
         (10M hosts × 60B ≈ 600MB would pass a 10M-row gate; VERDICT r3
-        item 4).  The legacy row knob still applies as a secondary cap."""
+        item 4)."""
         return joins.broadcast_if_small(
-            df, self._n_hosts,
-            max_bytes=getattr(self.cfg, "broadcast_host_max_bytes",
-                              joins.DEFAULT_BROADCAST_MAX_BYTES),
-            max_rows=getattr(self.cfg, "broadcast_host_threshold",
-                             10_000_000))
+            df, self._n_hosts, max_bytes=self.cfg.broadcast_host_max_bytes)
 
     # ------------------------------------------------------------------
     def _ingoogle_cols(self) -> list[str]:
@@ -797,7 +793,7 @@ class CrawlDriver:
         # remains is the winner ordering, the politeness delays and the
         # schedule-output columns.  ~10 longs/row instead of the 51-
         # column (3-string) row the r5 plan sorted and shuffled.
-        d = getattr(cfg, "fetch_duration_ms", 0)
+        d = cfg.fetch_duration_ms
         keep = [*gkeys, "priority", "hop_count", "spider_time_ms",
                 "harvest_links", "err_count", "prev_content_hash32",
                 "last_spidered_ms", "ip_wait_ms", "crawl_delay_ms"]
@@ -806,37 +802,24 @@ class CrawlDriver:
         cand = cand.select(*[c for c in keep if c in cand.columns])
 
         # ---- 6. winners per IP (D2 window) + 7. spacing (D7/D6) -------
-        w_ip = Window.partitionBy("first_ip").orderBy(
-            F.desc(F.col("priority")), F.asc("hop_count"),
-            F.asc("spider_time_ms"), F.asc("uh48"))
-        salt_buckets = getattr(cfg, "winner_salt_buckets", 0)
-        if salt_buckets > 0 or "_salt" in cand.columns:
-            # hot-IP skew: a zipfian frontier puts 10%+ of all candidates
-            # on one IP, making the winner window a single straggler sort
-            # task.  Two-phase exact top-K: pre-rank inside (ip, salt)
-            # keeping winner_k (global winners survive any salt split),
-            # so no task sorts more than ~|hot ip|/buckets rows.  The
-            # STORED _salt column (salted frontier layout) makes phase 1
-            # exchange-free over the bucketed scan — the window's
-            # (first_ip,_salt) clustering is the scan partitioning — and
-            # only the ≤K-per-(ip,salt) survivors pay the per-IP
-            # exchange of phase 2.  winner_salt_buckets (legacy knob)
-            # re-derives the salt when the column is absent.
-            stored_salt = "_salt" in cand.columns
-            if not stored_salt:
-                cand = cand.withColumn(
-                    "_salt", F.pmod(F.col("uh48"),
-                                    F.lit(salt_buckets)))
-            w_salt = Window.partitionBy("first_ip", "_salt").orderBy(
-                F.desc(F.col("priority")), F.asc("hop_count"),
-                F.asc("spider_time_ms"), F.asc("uh48"))
-            # a STORED salt survives to the schedule so run_round can
-            # hydrate urls by the storage triple (bucketed-scan join);
-            # a knob-derived salt is not the storage salt — drop it
-            cand = (cand
-                    .withColumn("_r1", F.row_number().over(w_salt))
-                    .filter(F.col("_r1") <= cfg.winner_k)
-                    .drop("_r1", *([] if stored_salt else ["_salt"])))
+        # hot-IP skew: a zipfian frontier puts 10%+ of all candidates on
+        # one IP, making the winner window a single straggler sort task.
+        # Two-phase exact top-K: pre-rank inside (ip, salt) keeping
+        # winner_k (global winners survive any salt split), so no task
+        # sorts more than ~|hot ip|/SALT_WIDTH rows.  The stored _salt
+        # makes phase 1 exchange-free over the bucketed scan — the
+        # window's (first_ip,_salt) clustering is the scan partitioning —
+        # and only the ≤K-per-(ip,salt) survivors pay the per-IP exchange
+        # of phase 2.  _salt survives to the schedule so _schedule can
+        # hydrate urls by the storage triple.
+        order = [F.desc(F.col("priority")), F.asc("hop_count"),
+                 F.asc("spider_time_ms"), F.asc("uh48")]
+        w_salt = Window.partitionBy("first_ip", "_salt").orderBy(*order)
+        w_ip = Window.partitionBy("first_ip").orderBy(*order)
+        cand = (cand
+                .withColumn("_r1", F.row_number().over(w_salt))
+                .filter(F.col("_r1") <= cfg.winner_k)
+                .drop("_r1"))
         cand = (cand.withColumn("_rank", F.row_number().over(w_ip))
                 .filter(F.col("_rank") <= cfg.winner_k))
         if d <= 0:
@@ -950,6 +933,44 @@ class CrawlDriver:
         return [requests.select("uh48")]
 
     # ------------------------------------------------------------------
+    def _schedule(self, cand: DataFrame, requests: DataFrame,
+                  pins: list) -> DataFrame:
+        """Step 8 of the round: global priority order + budget (doledb
+        scan), the doledb-order seq stamp, and the url/host hydration of
+        the winners.  Band-pruned budget (only the boundary priority band
+        is sorted, operators/budget.py) + distributed seq stamping
+        (range-partition + per-partition offsets) — no coalesce(1), no
+        global window.  Every DataFrame persisted here lands in ``pins``;
+        the caller unpersists them."""
+        sel = cand.select(
+            "uh48", "first_ip", "_salt", "hop_count",
+            "priority", "harvest_links", "fetch_time_ms",
+            F.coalesce("err_count", F.lit(0)).alias("prev_errs"),
+            F.coalesce("prev_content_hash32", F.lit(0))
+            .alias("prev_hash32"),
+            F.coalesce("last_spidered_ms", F.lit(0).cast("long"))
+            .alias("prev_spidered_ms"))
+        sel = budget_ops.budget_select(sel, self.cfg.budget, pins=pins)
+        scheduled = budget_ops.stamp_global_seq(
+            sel, [F.desc("priority"), F.asc("fetch_time_ms"),
+                  F.asc("uh48")], pins=pins)
+        # late materialization (VERDICT r5 Wrong #1 / guide §8): the
+        # candidate pipeline ran string-free; hydrate url/host for the
+        # ≤budget winners only (doledb stores the winning request — same
+        # idea).  The join runs on the storage triple so the frontier
+        # side reuses the bucketed scan partitioning — the small schedule
+        # side shuffles, the scan does not, and no budget-sized relation
+        # round-trips through the driver as a broadcast.  dropDuplicates
+        # (clustering-compatible, so exchange-free here) collapses
+        # duplicate stored rows of a scheduled uh48 — url and host are
+        # uh48-functional, so content matches the dedup winner's strings.
+        hk = ["first_ip", "_salt", "uh48"]
+        scheduled = (requests.select(*hk, "url", "host")
+                     .join(scheduled, hk)
+                     .dropDuplicates(hk)
+                     .drop("_salt"))
+        return budget_ops._pin(scheduled, pins)
+
     def run_round(self, rnd: int) -> dict:
         cfg = self.cfg
         now_ms = cfg.t0_ms + rnd * cfg.round_ms
@@ -961,56 +982,8 @@ class CrawlDriver:
         # every DataFrame persisted below lands in pins and is unpersisted
         # at the end of the round — no cache accumulation across rounds
         pins: list = []
-
-        # ---- 8. global priority order + budget (doledb scan) ----------
-        # band-pruned budget (only the boundary priority band is sorted,
-        # operators/budget.py) + distributed seq stamping (range-partition
-        # + per-partition offsets) — no coalesce(1), no global window
-        salted_sched = "_salt" in cand.columns
-        sel = cand.select(
-            "uh48", "first_ip",
-            *(["_salt"] if salted_sched else []),
-            "hop_count",
-            "priority", "harvest_links", "fetch_time_ms",
-            F.coalesce("err_count", F.lit(0)).alias("prev_errs"),
-            F.coalesce("prev_content_hash32", F.lit(0))
-            .alias("prev_hash32"),
-            F.coalesce("last_spidered_ms", F.lit(0).cast("long"))
-            .alias("prev_spidered_ms"))
-        sel = budget_ops.budget_select(sel, cfg.budget, pins=pins)
-        scheduled = budget_ops.stamp_global_seq(
-            sel, [F.desc("priority"), F.asc("fetch_time_ms"),
-                  F.asc("uh48")], pins=pins)
-        # late materialization (VERDICT r5 Wrong #1 / guide §8): the
-        # candidate pipeline ran string-free; hydrate url/host for the
-        # ≤budget winners only (doledb stores the winning request — same
-        # idea).  Salted layout: join on the storage triple so the
-        # frontier side reuses the bucketed scan partitioning — the
-        # small schedule side shuffles, the scan does not, and no 500k-
-        # row relation round-trips through the driver as a broadcast.
-        # dropDuplicates (clustering-compatible, so exchange-free here)
-        # collapses duplicate stored rows of a scheduled uh48 — url and
-        # host are uh48-functional, so content matches the dedup
-        # winner's strings the pre-r6 plan carried.
-        mode = os.environ.get("OSSE_HYDRATE",
-                              getattr(cfg, "hydrate_mode", "auto"))
-        if salted_sched and mode != "broadcast":
-            hk = ["first_ip", "_salt", "uh48"]
-            scheduled = (requests.select(*hk, "url", "host")
-                         .join(scheduled, hk)
-                         .dropDuplicates(hk)
-                         .drop("_salt"))
-        else:
-            scheduled = scheduled.drop("_salt") if salted_sched \
-                else scheduled
-            hyd = requests.select("uh48", "url", "host")
-            if cfg.budget <= getattr(cfg, "hydrate_broadcast_rows",
-                                     2_000_000):
-                scheduled = hyd.join(F.broadcast(scheduled), "uh48")
-            else:
-                scheduled = hyd.join(scheduled, "uh48")
-            scheduled = scheduled.dropDuplicates(["uh48"])
-        scheduled = budget_ops._pin(scheduled, pins)
+        # ---- 8. budget + seq + url/host hydration ----------------------
+        scheduled = self._schedule(cand, requests, pins)
 
         # ---- 9. fetch simulation (A4: join vs pages) -------------------
         fetched = (

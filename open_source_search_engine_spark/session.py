@@ -76,22 +76,10 @@ def get_spark(
         # once several cores contend (measured on this box: identical
         # work costs 1.55x the CPU-seconds at 8 cores vs 2).  Streaming
         # aggs touch memory sequentially and scale with cores.
-        # SPARK_GRAFT_STREAMAGG=0 restores the hash plans.
         .config("spark.sql.legacy.bucketedTableScan.outputOrdering",
-                "false" if os.environ.get("SPARK_GRAFT_STREAMAGG") == "0"
-                else "true")
+                "true")
         .config("spark.sql.execution.replaceHashWithSortAgg.enabled",
-                "false" if os.environ.get("SPARK_GRAFT_STREAMAGG") == "0"
-                else "true")
-        # SPARK_GRAFT_SHJ=1: prefer shuffled-hash over sort-merge joins.
-        # With shuffle.partitions pinned to bound per-partition build
-        # size, a co-partitioned high-cardinality equi-join (frontier
-        # dedup ⋈ latest-reply) needs no sort at all — the upstream
-        # hash aggregations then run sort-free end-to-end.  Off by
-        # default: SMJ is the safe choice under unknown skew.
-        .config("spark.sql.join.preferSortMergeJoin",
-                "false" if os.environ.get("SPARK_GRAFT_SHJ") == "1"
-                else "true")
+                "true")
         .config("spark.ui.enabled",
                 "true" if os.environ.get("SPARK_GRAFT_UI") == "1"
                 else "false")

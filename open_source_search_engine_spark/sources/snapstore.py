@@ -48,11 +48,13 @@ from pyspark.sql import DataFrame, SparkSession
 # per-task rows stay bounded by hot_ip/SALT_WIDTH (BENCH.md round-4
 # variant matrix: checksum-identical to the unsalted plan, 1.63× at 32
 # cores).  uh48→first_ip is functional (one canonical url, one resolved
-# IP), so the triple-key grouping is exactly per-uh48 dedup.  At 10^10
-# urls raise the knobs via env; values only change file layout, never
-# results.
+# IP), so the triple-key grouping is exactly per-uh48 dedup.
+# FRONTIER_BUCKETS only changes file layout, never results.  SALT_WIDTH
+# is a constant: _salt is STORED data, so two processes deriving it with
+# different widths over one workdir would split a uh48 across triple-key
+# groups.
 FRONTIER_BUCKETS = int(os.environ.get("OSSE_FRONTIER_BUCKETS", "32"))
-SALT_WIDTH = int(os.environ.get("OSSE_FRONTIER_SALT", "16"))
+SALT_WIDTH = 16
 _FRONTIER_BUCKETED = ("requests", "replies", "inlinks")
 FRONTIER_BUCKET_COLS = ["first_ip", "_salt"]
 FRONTIER_SORT_COLS = ["first_ip", "_salt", "uh48"]

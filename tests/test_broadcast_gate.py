@@ -65,13 +65,6 @@ def test_unknown_rows_means_no_hint(spark):
     assert not _has_hint(out)
 
 
-def test_row_cap_still_applies(spark):
-    df = spark.createDataFrame([], THIN)
-    out = spark.range(1).join(
-        joins.broadcast_if_small(df, 100, max_rows=10), F.lit(True), "left")
-    assert not _has_hint(out)
-
-
 @pytest.mark.parametrize("n_hosts,expect_hint", [
     (100, True),            # toy scale: broadcast wins
     (50_000_000, False),    # 50M hosts × ~80B ≈ 4GB: shuffle join
@@ -108,4 +101,38 @@ def test_no_unconditional_host_broadcast_in_source_tree():
             if "F.broadcast(" in line and "host" in line.lower() \
                     and p.name != "joins.py":
                 offenders.append(f"{p.name}:{i}: {line.strip()}")
+    assert not offenders, offenders
+
+
+# every environment switch the product reads, each kept on purpose:
+# core count, the shuffle-partition pin and AQE (perfbench and the
+# scaling runs set them), driver memory, the Spark UI, and the frontier
+# bucket count (file layout only, never results)
+ENV_ALLOW = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_AQE",
+             "SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_UI",
+             "OSSE_FRONTIER_BUCKETS"}
+
+
+def test_no_unlisted_env_switch_in_source_tree():
+    """Knob gate: the product package and crawl_main.py read no
+    environment variable outside ENV_ALLOW, and every read names its
+    variable as a literal.  A new switch has to be added to the list on
+    purpose (and justified there)."""
+    import pathlib
+    import re
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    files = [*(repo / "open_source_search_engine_spark").rglob("*.py"),
+             repo / "crawl_main.py"]
+    ref = re.compile(r"os\.(?:environ|getenv)\b")
+    named = re.compile(r"os\.(?:environ\.get\(|environ\[|getenv\()\s*"
+                       r"[\"']([A-Za-z0-9_]+)[\"']")
+    offenders = []
+    for p in files:
+        text = p.read_text()
+        names = [m.group(1) for m in named.finditer(text)]
+        offenders += [f"{p.name}: {n}" for n in names if n not in ENV_ALLOW]
+        unnamed = len(ref.findall(text)) - len(names)
+        if unnamed:
+            offenders.append(f"{p.name}: {unnamed} environment access(es) "
+                             "without a literal variable name")
     assert not offenders, offenders

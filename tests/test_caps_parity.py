@@ -83,10 +83,27 @@ def test_duration_zero_is_unchanged(corpus, spark, tmp_path_factory):
     got, want, _ = _run_both(corpus, spark, tmp_path_factory, cfg, "d0")
     assert got == want and len(got) > 0
 
-def test_salted_winner_topk_parity(corpus, spark, tmp_path_factory):
-    """winner_salt_buckets > 0 (hot-IP skew mitigation) is exact: the
-    two-phase salted top-K produces the identical schedule."""
-    cfg = CrawlConfig(rounds=2, budget=80, round_ms=600_000,
-                      winner_salt_buckets=8)
-    got, want, _ = _run_both(corpus, spark, tmp_path_factory, cfg, "salt")
+
+@pytest.mark.parametrize("winner_k", [2, 3])
+def test_phase1_winner_topk_parity(corpus, spark, tmp_path_factory,
+                                   winner_k):
+    """The two-phase winner top-K (phase 1 per (first_ip,_salt), phase 2
+    per first_ip) is exact even when phase 1 prunes: with the default
+    winner_k the oracle schedules more than winner_k urls of one
+    (round, ip, salt), so at this winner_k phase 1 cuts real candidates."""
+    from open_source_search_engine_spark.sources.snapstore import SALT_WIDTH
+    full = OracleCrawler(pd.read_parquet(corpus["pages"]),
+                         pd.read_parquet(corpus["hostmeta"]),
+                         pd.read_parquet(corpus["seeds"]),
+                         CrawlConfig(rounds=3, budget=80,
+                                     round_ms=600_000)).run(3)
+    per_salt: dict = {}
+    for s in full.schedule:
+        key = (s["round"], s["first_ip"], s["uh48"] % SALT_WIDTH)
+        per_salt[key] = per_salt.get(key, 0) + 1
+    assert max(per_salt.values()) > winner_k
+    cfg = CrawlConfig(rounds=3, budget=80, round_ms=600_000,
+                      winner_k=winner_k)
+    got, want, _ = _run_both(corpus, spark, tmp_path_factory, cfg,
+                             f"k{winner_k}", rounds=3)
     assert got == want and len(got) > 0

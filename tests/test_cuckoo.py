@@ -2,9 +2,9 @@
 
 Contract (operators/cuckoo.py, after Fan et al. CoNEXT'14):
 - no false negatives for inserted keys (lookup of every inserted key hits)
-- deletion removes exactly the deleted keys' visibility (no false
-  negatives for the keys that stay)
-- the Spark routing columns match the NumPy kernel bit-for-bit
+- set semantics: duplicate keys store one fingerprint copy
+- the Spark routing and in-place insert keep the no-false-negative
+  guarantee
 """
 
 import numpy as np
@@ -36,29 +36,13 @@ def test_false_positive_rate_sane():
     assert fpr < 0.005, fpr
 
 
-def test_delete_forgets_only_the_deleted():
-    keys = _keys(10_000)
-    nb = C._n_buckets_for(len(keys), 1.5)
-    table = C._build_table(keys, nb)
-    gone, kept = keys[:500], keys[500:]
-    removed = C._delete(table, np.unique(gone), nb)
-    assert removed == len(np.unique(gone))
-    # kept keys: still zero false negatives (deletion only touched slots
-    # holding a matching fingerprint of a deleted key's buckets)
-    assert C._lookup(table, kept, nb).all()
-    # deleted keys: mostly gone (a residual hit is a fingerprint
-    # collision with a kept key — bounded by the FP rate)
-    assert C._lookup(table, gone, nb).mean() < 0.01
-
-
 def test_duplicate_inserts_collapse():
     keys = np.repeat(_keys(1_000), 5)
     nb = C._n_buckets_for(1_000, 1.5)
     table = C._build_table(keys, nb)
     assert C._lookup(table, np.unique(keys), nb).all()
-    # set semantics: one stored copy per key -> one delete fully removes
-    uniq = np.unique(keys)
-    assert C._delete(table, uniq[:10], nb) == 10
+    # set semantics: one stored fingerprint per distinct key
+    assert int((table != 0).sum()) == len(np.unique(keys))
 
 
 def test_high_load_kick_path():
@@ -85,7 +69,7 @@ def test_over_capacity_raises():
 
 
 @pytest.mark.usefixtures("spark")
-def test_spark_roundtrip_and_delete(spark):
+def test_spark_roundtrip_and_insert(spark):
     from pyspark.sql import functions as F
 
     seen = spark.range(5_000).select(
@@ -101,16 +85,15 @@ def test_spark_roundtrip_and_delete(spark):
     maybe = C.cuckoo_maybe_seen(fresh, filt, partition_bits=3) \
         .filter("maybe_seen").count()
     assert maybe < 0.01 * n_fresh
-    # negative-key annihilation: deleted keys stop routing as seen,
-    # surviving keys keep routing as seen
-    dels = seen.limit(300)
-    filt2 = C.cuckoo_delete(filt, dels, partition_bits=3)
-    still = C.cuckoo_maybe_seen(dels, filt2, partition_bits=3) \
+    # in-place insert: the fresh keys route as seen afterwards, and the
+    # already-seen keys keep routing as seen
+    grown = C.cuckoo_insert(filt, fresh, partition_bits=3)
+    row = grown.agg(F.sum("n_requested").alias("rq"),
+                    F.sum("n_applied").alias("ap")).collect()[0]
+    assert row.rq == row.ap == n_fresh
+    filt2 = grown.select("bucket", "n_buckets", "table")
+    both = seen.unionByName(fresh)
+    ok = C.cuckoo_maybe_seen(both, filt2, partition_bits=3) \
         .filter("maybe_seen").count()
-    assert still < 10
-    survivors = seen.join(dels, "uh48", "left_anti")
-    n_surv = survivors.count()
-    ok = C.cuckoo_maybe_seen(survivors, filt2, partition_bits=3) \
-        .filter("maybe_seen").count()
-    assert ok == n_surv
+    assert ok == both.count()
     filt.unpersist()

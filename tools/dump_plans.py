@@ -6,9 +6,8 @@ Usage: python tools/dump_plans.py <suffix>   (suffix = before|after)
 Covers:
 - the 9 headline queries over $SPARK_GRAFT_SF_DIR (default sf0.1)
 - the PRODUCT candidate plan + scheduled plan over a toy synthweb crawl
-  (plan SHAPE is data-size independent; the bucketed-state variant is
-  additionally dumped post-compaction)
-- the bench frontier scheduling plan over salted bucketed storage
+  after compaction (plan SHAPE is data-size independent)
+- the new-request exact-confirm anti-join against the url_seen table
 """
 
 from __future__ import annotations
@@ -49,7 +48,6 @@ def main():
     # product round: candidate + scheduled plans over compacted state
     from pyspark.sql import functions as F
 
-    from open_source_search_engine_spark.operators import budget as b
     from open_source_search_engine_spark.oracle.crawler import CrawlConfig
     from open_source_search_engine_spark.plans import compaction
     from open_source_search_engine_spark.plans.scheduler import CrawlDriver
@@ -69,45 +67,18 @@ def main():
                            cfg.t0_ms + 2 * cfg.round_ms)
     dump("product_candidates", cand)
     pins: list = []
-    salted = "_salt" in cand.columns
-    keep = [c for c in ("uh48", "first_ip", "_salt", "hop_count",
-                        "priority", "harvest_links", "fetch_time_ms")
-            if c in cand.columns]
-    sel = cand.select(*keep,
-                      F.coalesce("err_count", F.lit(0)).alias("prev_errs"))
-    sel = b.budget_select(sel, cfg.budget, pins=pins)
-    scheduled = b.stamp_global_seq(
-        sel, [F.desc("priority"), F.asc("fetch_time_ms"), F.asc("uh48")],
-        pins=pins)
-    if salted:  # run_round's late-materialization hydration join
-        hk = ["first_ip", "_salt", "uh48"]
-        scheduled = (requests.select(*hk, "url", "host")
-                     .join(scheduled, hk)
-                     .dropDuplicates(hk).drop("_salt"))
-    dump("product_scheduled", scheduled)
+    dump("product_scheduled", drv._schedule(cand, requests, pins))
     for p in pins:
         p.unpersist()
 
     # exact-confirm (url_seen) anti-join plan for the new-request path,
     # at the frontier-scale join shape (no broadcast of the seen side)
-    try:
-        left = spark.range(0, 10).select(F.col("id").alias("uh48"))
-        if hasattr(drv, "_seen_parts"):
-            parts = drv._seen_parts(requests)
-        else:  # pre-r6 shape
-            parts = [requests.select("uh48").distinct()]
-        for p in parts:
-            left = left.join(p, "uh48", "left_anti")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        dump("exact_confirm_anti", left)
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    except Exception as e:  # pre-refactor shape
-        print("exact_confirm_anti skipped:", e)
-
-    # bench frontier plan over salted bucketed storage (small row count)
-    import bench
-    os.environ.setdefault("OSSE_BENCH_DATADIR",
-                          os.path.join(tmp, "bench_data"))
+    left = spark.range(0, 10).select(F.col("id").alias("uh48"))
+    for p in drv._seen_parts(requests):
+        left = left.join(p, "uh48", "left_anti")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    dump("exact_confirm_anti", left)
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     spark.stop()
 
 
