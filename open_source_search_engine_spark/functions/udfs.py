@@ -6,6 +6,19 @@ parity-critical per-document transforms the reference implements in C++
 else (filters, windows, joins, politeness arithmetic) is pure Column
 expressions compiled by functions/filters.py.
 
+One Python pass per row: the crawl round runs ONE fused UDF per fetched
+page (fetched_page_udf: content hash, parent domain and the followed
+outlinks keyed url/uh48/host/domain — Links::set plus
+addOutlinkSpiderRecsToMetaList's walk), and seed intake runs ONE per seed
+url (url_identity_udf: canonical url, uh48, host, domain).  The fused
+UDFs call the same kernel helpers as the single-purpose UDFs below, so
+their outputs are bit-identical.  The single-purpose UDFs remain for
+their other callers: streaming/ingest.py (canonicalize → uh48 + host →
+domain), plans/search.py (canonicalize, uh48, host), plans/querylang.py
+(uh48), CrawlDriver.delete_urls (canonicalize + uh48) and
+_migrate_requests (domain), and perfbench (its UDF layer in layers.py,
+uh48 in inputs.py).
+
 Scale notes: each UDF receives Arrow record batches
 (spark.sql.execution.arrow.maxRecordsPerBatch rows at a time), so Python
 overhead is amortized per batch; the hash UDF is fully NumPy-vectorized
@@ -15,18 +28,30 @@ No driver-side collect anywhere.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..kernel import extract, gbhash, robots, urlnorm
 
 
+def _canonical(url):
+    return urlnorm.canonicalize(url) if url else ""
+
+
+def _host(url):
+    return urlnorm.get_host(url) if url else ""
+
+
+def _domain(host):
+    return urlnorm.get_domain(host) if host else ""
+
+
 @pandas_udf(T.StringType())
 def canonicalize_udf(urls: pd.Series) -> pd.Series:
     """Url::set canonical form (Url.cpp:141-840)."""
-    return urls.map(lambda u: urlnorm.canonicalize(u) if u else "")
+    return urls.map(_canonical)
 
 
 @pandas_udf(T.LongType())
@@ -50,12 +75,12 @@ def probable_docid_udf(urls: pd.Series) -> pd.Series:
 
 @pandas_udf(T.StringType())
 def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: urlnorm.get_host(u) if u else "")
+    return urls.map(_host)
 
 
 @pandas_udf(T.StringType())
 def domain_udf(hosts: pd.Series) -> pd.Series:
-    return hosts.map(lambda h: urlnorm.get_domain(h) if h else "")
+    return hosts.map(_domain)
 
 
 @pandas_udf(T.StringType())
@@ -65,7 +90,6 @@ def tld_udf(hosts: pd.Series) -> pd.Series:
 
 @pandas_udf(T.IntegerType())
 def host_hash32_udf(hosts: pd.Series) -> pd.Series:
-    import numpy as np
     return hosts.map(
         lambda h: np.int32(np.uint32(gbhash.hash32s(h or ""))).item())
 
@@ -155,37 +179,102 @@ _LINKS_SCHEMA = T.ArrayType(T.StructType([
 ]))
 
 
+def _page_links(html, base_url) -> list:
+    """Links::set + per-page dedup (Linkdb.cpp:4980, XmlDoc.cpp:27682)."""
+    if html is None:
+        return []
+    if isinstance(html, (bytes, bytearray)):
+        html = html.decode("utf-8", "replace")
+    return extract.dedup_links(extract.extract_links(html, base_url or ""))
+
+
+def _content_hash32(html) -> int:
+    """m_contentHash32 analog (Spider.h:869) via gb hash32."""
+    if html is None:
+        return 0
+    if isinstance(html, str):
+        html = html.encode("utf-8", "replace")
+    return np.int32(np.uint32(gbhash.hash32(html))).item()
+
+
 @pandas_udf(_LINKS_SCHEMA)
 def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
     """Links::set + per-page dedup (Linkdb.cpp:4980, XmlDoc.cpp:27682)."""
-    def one(h, b):
-        if h is None:
-            return []
-        if isinstance(h, (bytes, bytearray)):
-            h = h.decode("utf-8", "replace")
-        return [tuple(ln) for ln in
-                extract.dedup_links(extract.extract_links(h, b or ""))]
-    return pd.Series([one(h, b) for h, b in zip(html, base_url)])
+    return pd.Series([[tuple(ln) for ln in _page_links(h, b)]
+                      for h, b in zip(html, base_url)])
 
 
 @pandas_udf(T.IntegerType())
 def content_hash32_udf(html: pd.Series) -> pd.Series:
     """m_contentHash32 analog (Spider.h:869) via gb hash32."""
-    import numpy as np
-
-    def one(h):
-        if h is None:
-            return 0
-        if isinstance(h, str):
-            h = h.encode("utf-8", "replace")
-        return np.int32(np.uint32(gbhash.hash32(h))).item()
-    return html.map(one)
+    return html.map(_content_hash32)
 
 
-def with_url_identity(df, url_col: str = "url"):
-    """Attach canonical url, uh48, host, domain columns."""
-    c = F.col(url_col)
-    return (df
-            .withColumn("url", canonicalize_udf(c))
-            .withColumn("uh48", uh48_udf(F.col("url")))
-            .withColumn("host", host_udf(F.col("url"))))
+_FETCHED_PAGE_SCHEMA = T.StructType([
+    T.StructField("content_hash32", T.IntegerType()),
+    T.StructField("parent_domain", T.StringType()),
+    T.StructField("links", T.ArrayType(T.StructType([
+        T.StructField("url", T.StringType()),
+        T.StructField("is_rss", T.BooleanType()),
+        T.StructField("uh48", T.LongType()),
+        T.StructField("host", T.StringType()),
+        T.StructField("domain", T.StringType()),
+    ]))),
+])
+
+
+@pandas_udf(_FETCHED_PAGE_SCHEMA)
+def fetched_page_udf(html: pd.Series, url: pd.Series, host: pd.Series,
+                     harvest_links: pd.Series) -> pd.DataFrame:
+    """Everything a crawl round derives from one fetched page, in one
+    pass (Links::set + addOutlinkSpiderRecsToMetaList, Linkdb.cpp:4980,
+    XmlDoc.cpp:27415-28000): its content hash, its domain, and its
+    followed outlinks keyed as new requests.  ``links`` keeps the
+    deduped extraction order; nofollow links drop AFTER the dedup, so a
+    url whose first copy is nofollow stays dropped.  Pages with no html
+    or with harvest_links off yield no links.  One uh48_batch call
+    hashes every link of the Arrow batch."""
+    pages = [[ln for ln in _page_links(h, b) if not ln.nofollow]
+             if h is not None and hv else []
+             for h, b, hv in zip(html, url, harvest_links)]
+    uh48s = iter(gbhash.uh48_batch(
+        [ln.url for links in pages for ln in links])
+        .astype("int64").tolist())
+    out = []
+    for links in pages:
+        row = []
+        for ln in links:
+            lh = _host(ln.url)
+            row.append((ln.url, ln.is_rss, next(uh48s), lh, _domain(lh)))
+        out.append(row)
+    return pd.DataFrame({"content_hash32": html.map(_content_hash32),
+                         "parent_domain": host.map(_domain),
+                         "links": out})
+
+
+_URL_IDENTITY_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("uh48", T.LongType()),
+    T.StructField("host", T.StringType()),
+    T.StructField("domain", T.StringType()),
+])
+
+
+@pandas_udf(_URL_IDENTITY_SCHEMA)
+def url_identity_udf(urls: pd.Series) -> pd.DataFrame:
+    """canonicalize → uh48 + host → domain of a raw url in one pass —
+    the keyed identity of a seed request ('' url for unusable input)."""
+    canon = [_canonical(u) for u in urls]
+    hosts = [_host(u) for u in canon]
+    return pd.DataFrame({
+        "url": canon,
+        "uh48": gbhash.uh48_batch(canon).astype("int64"),
+        "host": hosts,
+        "domain": [_domain(h) for h in hosts]})
+
+
+# Marked nondeterministic as an optimizer barrier only (the kernels are
+# pure): callers filter on the canonical url and inner-join on the host,
+# and Spark would push those predicates beneath the projection — running
+# the UDF once for the filter and again for the output columns.
+url_identity_udf = url_identity_udf.asNondeterministic()

@@ -11,7 +11,8 @@ One scheduling round (SURVEY §3.1 restatement) =
       → global ORDER BY priority DESC, fetch_time LIMIT budget (doledb scan,
         Spider.cpp:6758)
       → fetch = left join against pages (Msg13 simulated)
-      → extract links/text (Arrow UDFs) → posexplode → new requests
+      → one fused Arrow UDF per fetched page (content hash + outlinks
+        keyed uh48/host/domain) → posexplode → new requests
         (exact anti-join vs the uh48-bucketed url_seen set)
       → append replies/requests, update ip_state, commit snapshot + metrics
 
@@ -30,8 +31,9 @@ Scale design (10^10-URL frontier, 1000 executors):
   is bounded here: the per-IP window ranks at most the requests of one IP
   partition, and AQE skew-split handles oversized partitions for the scan/
   filter stages; the window itself is capped by winner_k via rank filter.
-- only the scheduled rows (≤ budget per round) hit the Python extraction
-  UDFs; the filter/politeness path is whole-stage-codegen Column math.
+- only the scheduled rows (≤ budget per round) hit Python, once each
+  (udfs.fetched_page_udf, pinned with the page); the filter/politeness
+  path is whole-stage-codegen Column math.
 - every state table is snapshot-committed (Iceberg in production; see
   sources/snapstore.py) → resumable mid-crawl, per-round lineage+metrics.
 """
@@ -221,12 +223,12 @@ class CrawlDriver:
         if self.t_requests.exists():
             return 0
         seeds = self.spark.read.parquet(seeds_path)
+        # one Python pass per seed url: canonical url, uh48, host, domain
         reqs = (
             seeds
-            .withColumn("url", udfs.canonicalize_udf(F.col("url")))
+            .withColumn("_id", udfs.url_identity_udf(F.col("url")))
+            .select("_id.*", "added_time_ms")
             .filter(F.length("url") > 0)
-            .withColumn("uh48", udfs.uh48_udf(F.col("url")))
-            .withColumn("host", udfs.host_udf(F.col("url")))
             .join(self._bcast_hosts(
                       self.hostmeta.select("host", "first_ip",
                                            *self._ingoogle_cols())),
@@ -234,8 +236,7 @@ class CrawlDriver:
             .select(
                 "url", "uh48",
                 F.col("first_ip").cast("long").alias("first_ip"),
-                "host",
-                udfs.domain_udf(F.col("host")).alias("domain"),
+                "host", "domain",
                 F.lit(0).alias("hop_count"),
                 F.col("added_time_ms").cast("long"),
                 F.col("added_time_ms").cast("long")
@@ -258,7 +259,9 @@ class CrawlDriver:
             )
             .dropDuplicates(["uh48"])
         )
-        reqs = with_salt(reqs)  # stored skew-salt (salted layout)
+        # stored skew-salt (salted layout); persisted so the count, the
+        # requests append and the url_seen base read the same rows
+        reqs = budget_ops._pin(with_salt(reqs), None)
         n = reqs.count()
         self.t_requests.append(reqs, {"round": -1, "rows": n,
                                       "source": "seed"})
@@ -272,6 +275,7 @@ class CrawlDriver:
             {"source": "seed", "rows": n,
              "synced_requests_snapshot":
                  self.t_requests.current_snapshot()})
+        reqs.unpersist()
         return n
 
     # ------------------------------------------------------------------
@@ -986,17 +990,23 @@ class CrawlDriver:
         scheduled = self._schedule(cand, requests, pins)
 
         # ---- 9. fetch simulation (A4: join vs pages) -------------------
+        # ONE Python pass per fetched page (udfs.fetched_page_udf):
+        # content hash, parent domain and the followed outlinks keyed as
+        # requests (uh48/host/domain).  Pinned with the page, so every
+        # consumer below reads struct fields and no UDF re-runs.
         fetched = (
             scheduled.join(self.pages.select("url", "html", "lang"),
                            "url", "left")
+            .withColumn("page", udfs.fetched_page_udf(
+                F.col("html"), F.col("url"), F.col("host"),
+                F.col("harvest_links")))
         )
         fetched = budget_ops._pin(fetched, pins)
 
         # m_contentHash32 + m_percentChangedPerDay (Spider.h:846,869):
         # hash delta vs the previous indexed fetch, per elapsed day
         ch = F.when(F.col("html").isNotNull(),
-                    udfs.content_hash32_udf(F.col("html"))) \
-            .otherwise(F.lit(0))
+                    F.col("page.content_hash32")).otherwise(F.lit(0))
         days_frac = ((F.col("fetch_time_ms") - F.col("prev_spidered_ms"))
                      .cast("double") / F.lit(86400000.0))
         new_replies = fetched.withColumn("_ch", ch).select(
@@ -1031,27 +1041,25 @@ class CrawlDriver:
         )
 
         # ---- 10. harvest outlinks (E5-E8) ------------------------------
-        parents = fetched.filter(
-            F.col("html").isNotNull() & F.col("harvest_links"))
+        # page.links is already deduped, nofollow-free and empty for
+        # pages without html or with harvest_links off; link_idx keeps
+        # the followed links' relative order for the first-discovery
+        # window below
         exploded = (
-            parents
-            .withColumn("links",
-                        udfs.extract_links_udf(F.col("html"), F.col("url")))
+            fetched
             .select(F.col("url").alias("parent_url"),
                     F.col("uh48").alias("parent_uh48"),
                     F.col("host").alias("parent_host"),
+                    F.col("page.parent_domain").alias("parent_domain"),
                     F.col("hop_count").alias("parent_hop"),
                     F.col("first_ip").alias("parent_ip"),
                     F.col("fetch_time_ms"), F.col("seq"),
-                    F.posexplode("links").alias("link_idx", "link"))
-            .filter(~F.col("link.nofollow"))
-            .withColumn("url", F.col("link.url"))
-            .withColumn("uh48", udfs.uh48_udf(F.col("url")))
+                    F.posexplode("page.links").alias("link_idx", "link"))
+            .select("*", "link.*").drop("link")
             .filter(F.col("uh48") != F.col("parent_uh48"))  # self link
-            .withColumn("host", udfs.host_udf(F.col("url")))
         )
-        # link extraction (Python UDF over ≤budget parents) feeds both the
-        # inlink table and the new-request path — run it once
+        # the harvested links feed both the inlink table and the
+        # new-request path — explode them once
         exploded = budget_ops._pin(exploded, pins)
         # F3: record (uh48, parent C-block) for every surviving link whose
         # host resolves — including already-seen urls (spiderdb accumulates
@@ -1097,9 +1105,6 @@ class CrawlDriver:
                       self.hostmeta.select("host", "first_ip",
                                            *self._ingoogle_cols())),
                   "host", "inner")  # unknown host = DNS failure
-            .withColumn("parent_domain", udfs.domain_udf(
-                F.col("parent_host")))
-            .withColumn("domain", udfs.domain_udf(F.col("host")))
             .select(
                 "url", "uh48",
                 F.col("first_ip").cast("long").alias("first_ip"),
@@ -1117,7 +1122,7 @@ class CrawlDriver:
                 F.lit(False).alias("parent_is_rss"),
                 F.lit(False).alias("parent_is_sitemap"),
                 F.lit(0).alias("page_num_inlinks"),
-                F.col("link.is_rss").alias("is_rss"),
+                "is_rss",
                 F.lit(True).alias("is_new_outlink"),
                 F.lit(True).alias("was_parent_indexed"),
                 F.lit(False).alias("is_docid_based"),

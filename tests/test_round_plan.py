@@ -174,3 +174,91 @@ def test_exact_confirm_uses_url_seen_table(driver, spark):
     assert s.count("Exchange hashpartitioning") <= len(parts), s[:3000]
     assert "HashAggregate" not in s and "SortAggregate" not in s, \
         "no distinct on the seen side:\n" + s[:2000]
+
+
+_SINGLE_PURPOSE_UDFS = ("extract_links_udf", "uh48_udf", "host_udf",
+                        "domain_udf", "content_hash32_udf",
+                        "canonicalize_udf")
+_PY_EVAL = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+            "FlatMapGroupsInPandas")
+
+
+def _py_eval_lines(plan: str) -> list[str]:
+    return [ln for ln in plan.splitlines()
+            if any(m in ln for m in _PY_EVAL)]
+
+
+@pytest.fixture(scope="module")
+def pinned_plans(spark, tmp_path_factory):
+    """Executed plans of every DataFrame seed() and run_round(0) pin,
+    captured on a fresh driver by wrapping budget_ops._pin (a
+    ``select("*")`` view is planned, so the pinned DataFrame's own
+    query execution stays untouched)."""
+    from open_source_search_engine_spark.operators import budget
+    d = str(tmp_path_factory.mktemp("synthweb_pins"))
+    paths = synthweb.write_corpus(d, n_hosts=6, mean_pages=4, n_seeds=3)
+    wd = str(tmp_path_factory.mktemp("crawlstate_pins"))
+    drv = CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], CFG)
+    plans = {"seed": [], "round": []}
+    real_pin = budget._pin
+    phase = ["seed"]
+
+    def spy(df, pins):
+        plans[phase[0]].append(
+            df.select("*")._jdf.queryExecution().executedPlan().toString())
+        return real_pin(df, pins)
+
+    budget._pin = spy
+    try:
+        drv.seed(paths["seeds"])
+        phase[0] = "round"
+        m = drv.run_round(0)
+    finally:
+        budget._pin = real_pin
+    assert m["new_urls"] > 0  # links really flowed through the round
+    return plans
+
+
+def test_round_runs_one_python_pass_per_page(pinned_plans):
+    """Every pinned round DataFrame evaluates Python only through the
+    fused fetched_page_udf; none of the single-purpose UDFs the harvest
+    path used to chain (extract → uh48 → host → domain ×2, plus the
+    content hash) appears in any pinned plan."""
+    plans = pinned_plans["round"]
+    assert len(plans) >= 4
+    py = [ln for p in plans for ln in _py_eval_lines(p)]
+    assert py and all("fetched_page_udf" in ln for ln in py), py
+    for p in plans:
+        assert len(_py_eval_lines(p)) <= 1, p
+        for name in _SINGLE_PURPOSE_UDFS:
+            assert name not in p, f"{name} in a pinned round plan:\n{p}"
+
+
+def test_seed_runs_one_python_pass_per_url(pinned_plans):
+    """seed() pins its request rows once, and that plan evaluates the
+    fused url_identity_udf in exactly one Python node."""
+    assert len(pinned_plans["seed"]) == 1, "seed() pins its rows once"
+    (plan,) = pinned_plans["seed"]
+    py = _py_eval_lines(plan)
+    assert len(py) == 1 and "url_identity_udf" in py[0], plan
+    for name in _SINGLE_PURPOSE_UDFS:
+        assert name not in plan, plan
+
+
+def test_seed_job_count_bounded(spark, tmp_path_factory):
+    """seed() evaluates its request plan once: the count, the requests
+    append and the url_seen base all read the pinned rows."""
+    d = str(tmp_path_factory.mktemp("synthweb_seedjobs"))
+    paths = synthweb.write_corpus(d, n_hosts=6, mean_pages=4, n_seeds=3)
+    wd = str(tmp_path_factory.mktemp("crawlstate_seedjobs"))
+    drv = CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], CFG)
+    sc = spark.sparkContext
+    sc.setJobGroup("seed-jobs", "seed")
+    try:
+        assert drv.seed(paths["seeds"]) == 3
+    finally:
+        sc.setJobGroup("", "")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("seed-jobs") or [])
+    # measured 9 with AQE stage-jobs; the four-UDF chain that re-ran its
+    # whole plan per action (count, append, url_seen base) fired 12
+    assert 0 < n_jobs <= 9, f"seed fired {n_jobs} jobs"

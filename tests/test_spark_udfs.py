@@ -132,3 +132,93 @@ def test_robots_allowed_col_matches_kernel(spark):
                                 "disallow array<string>, pc string")
     assert dfn.select(Fc.robots_allowed_col(
         F.col("disallow"), F.col("pc")).alias("ok")).collect()[0].ok
+
+
+def _want_page(html, url, host, harvest):
+    """Kernel composition the crawl round ran as five UDFs before the
+    fusion: extract + dedup, nofollow dropped after the dedup, then
+    uh48/host/domain per link; gb hash32 of the page; parent domain."""
+    import numpy as np
+    links = []
+    if html is not None and harvest:
+        for ln in extract.dedup_links(
+                extract.extract_links(html.decode("utf-8", "replace"),
+                                      url or "")):
+            if ln.nofollow:
+                continue
+            lh = urlnorm.get_host(ln.url) if ln.url else ""
+            links.append((ln.url, ln.is_rss, gbhash.uh48(ln.url), lh,
+                          urlnorm.get_domain(lh) if lh else ""))
+    ch = 0 if html is None else \
+        np.int32(np.uint32(gbhash.hash32(html))).item()
+    return ch, urlnorm.get_domain(host) if host else "", links
+
+
+def _edge_pages():
+    nf_then_followed = (b'<html><body>'
+                        b'<a rel="nofollow" href="/dup">x</a>'
+                        b'<a href="/kept">k</a>'
+                        b'<a href="/dup">y</a></body></html>')
+    self_link = (b'<html><body><a href="http://e.com/self">me</a>'
+                 b'<a href="http://f.org/o">o</a></body></html>')
+    return [
+        (None, "http://e.com/gone", "e.com", True),          # null html
+        (self_link, "http://e.com/self", "e.com", False),    # harvest off
+        (nf_then_followed, "http://e.com/p", "e.com", True),
+        (self_link, "http://e.com/self", "e.com", True),
+        (self_link, "", "", True),
+        (self_link, None, None, True),
+    ]
+
+
+def test_fetched_page_udf_matches_kernels(corpus_df, spark):
+    """The fused per-page UDF equals the kernel composition on every
+    corpus page and on the edge cases (null html, harvest off, a url
+    whose first copy is nofollow, a self-link, '' and None base urls)."""
+    rows = [(bytes(r.html), r.url, urlnorm.get_host(r.url), True)
+            for r in corpus_df.select("html", "url").collect()]
+    rows += _edge_pages()
+    df = spark.createDataFrame(
+        rows, "html binary, url string, host string, harvest boolean")
+    got = (df.withColumn("p", udfs.fetched_page_udf(
+                F.col("html"), F.col("url"), F.col("host"),
+                F.col("harvest")))
+           .select("html", "url", "host", "harvest", "p").collect())
+    assert len(got) == len(rows)
+    n_links = 0
+    for r in got:
+        html = None if r.html is None else bytes(r.html)
+        ch, pdom, links = _want_page(html, r.url, r.host, r.harvest)
+        assert r.p.content_hash32 == ch, r.url
+        assert r.p.parent_domain == pdom, r.url
+        assert [tuple(ln) for ln in r.p.links] == links, r.url
+        n_links += len(links)
+    assert n_links > len(rows)  # the corpus really links
+    by_url = {(r.url, r.harvest): [ln.url for ln in r.p.links]
+              for r in got}
+    # a nofollow first copy drops the url even though a later copy is
+    # followed (dedup runs before the nofollow filter)
+    assert by_url[("http://e.com/p", True)] == ["http://e.com/kept"]
+    # self-links stay in the UDF output; run_round filters them on uh48
+    assert "http://e.com/self" in by_url[("http://e.com/self", True)]
+    assert by_url[("http://e.com/self", False)] == []
+    assert by_url[("http://e.com/gone", True)] == []
+
+
+def test_url_identity_udf_matches_kernels(corpus_df, spark):
+    """The fused seed-url UDF equals canonicalize → uh48 + host → domain
+    on every corpus url plus raw, empty, null and non-http urls."""
+    urls = [r.url for r in corpus_df.select("url").collect()]
+    urls += ["HTTP://Example.COM:80/a/../b#frag", "example.org/path",
+             "", None, "ftp://files.example.net/pub/x.tgz",
+             "mailto:someone@example.com", "javascript:void(0)",
+             "http://a.b.co.uk/x?PHPSESSID=737aec14eb7b360983d4fe39395"]
+    df = spark.createDataFrame([(u,) for u in urls], "raw string")
+    got = (df.withColumn("id", udfs.url_identity_udf(F.col("raw")))
+           .select("raw", "id").collect())
+    assert len(got) == len(urls)
+    for r in got:
+        c = urlnorm.canonicalize(r.raw) if r.raw else ""
+        h = urlnorm.get_host(c) if c else ""
+        want = (c, gbhash.uh48(c), h, urlnorm.get_domain(h) if h else "")
+        assert tuple(r.id) == want, r.raw
