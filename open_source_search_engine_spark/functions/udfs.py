@@ -9,15 +9,15 @@ expressions compiled by functions/filters.py.
 One Python pass per row: the crawl round runs ONE fused UDF per fetched
 page (fetched_page_udf: content hash, parent domain and the followed
 outlinks keyed url/uh48/host/domain — Links::set plus
-addOutlinkSpiderRecsToMetaList's walk), and seed intake runs ONE per seed
-url (url_identity_udf: canonical url, uh48, host, domain).  The fused
-UDFs call the same kernel helpers as the single-purpose UDFs below, so
-their outputs are bit-identical.  The single-purpose UDFs remain for
-their other callers: streaming/ingest.py (canonicalize → uh48 + host →
-domain), plans/search.py (canonicalize, uh48, host), plans/querylang.py
-(uh48), CrawlDriver.delete_urls (canonicalize + uh48) and
-_migrate_requests (domain), and perfbench (its UDF layer in layers.py,
-uh48 in inputs.py).
+addOutlinkSpiderRecsToMetaList's walk), and url intake — seed() and the
+streaming ingest's to_requests — runs ONE per fed url (url_identity_udf:
+canonical url, uh48, host, domain).  The fused UDFs call the same kernel
+helpers as the single-purpose UDFs below, so their outputs are
+bit-identical.  The single-purpose UDFs remain for their other callers:
+plans/search.py (canonicalize, uh48, host), plans/querylang.py (uh48),
+CrawlDriver.delete_urls (canonicalize + uh48) and _migrate_requests
+(domain), and perfbench (its UDF layer in layers.py, uh48 in
+inputs.py).
 
 Scale notes: each UDF receives Arrow record batches
 (spark.sql.execution.arrow.maxRecordsPerBatch rows at a time), so Python

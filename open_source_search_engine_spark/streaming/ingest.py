@@ -38,8 +38,8 @@ def to_requests(stream: DataFrame, hostmeta: DataFrame,
                 n_hosts: int | None = None,
                 broadcast_max_bytes: int =
                 joins.DEFAULT_BROADCAST_MAX_BYTES) -> DataFrame:
-    """Canonicalize → uh48 → host → first_ip; drop unknown hosts (DNS-fail
-    analog) and corrupt future timestamps.
+    """Canonicalize → uh48 + host + domain (one url_identity_udf pass, as
+    the batch seeder) → first_ip; drop unknown hosts (DNS-fail analog).
 
     The hostmeta join is broadcast ONLY when the caller supplies a host
     count whose estimated bytes fit the driver budget (same size gate as
@@ -53,15 +53,15 @@ def to_requests(stream: DataFrame, hostmeta: DataFrame,
         n_hosts, max_bytes=broadcast_max_bytes)
     out = (
         stream
-        .withColumn("url", udfs.canonicalize_udf(F.col("url")))
+        # one Python pass per fed url: canonical url, uh48, host, domain
+        .withColumn("_id", udfs.url_identity_udf(F.col("url")))
+        .select("_id.*", "added_time_ms")
         .filter(F.length("url") > 0)
-        .withColumn("uh48", udfs.uh48_udf(F.col("url")))
-        .withColumn("host", udfs.host_udf(F.col("url")))
         .join(dim, "host")
         .select(
             "url", "uh48",
             F.col("first_ip").cast("long").alias("first_ip"), "host",
-            udfs.domain_udf(F.col("host")).alias("domain"),
+            "domain",
             F.lit(0).alias("hop_count"),
             F.col("added_time_ms").cast("long"),
             F.col("added_time_ms").cast("long").alias("discovery_time_ms"),

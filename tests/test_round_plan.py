@@ -262,3 +262,42 @@ def test_seed_job_count_bounded(spark, tmp_path_factory):
     # measured 9 with AQE stage-jobs; the four-UDF chain that re-ran its
     # whole plan per action (count, append, url_seen base) fired 12
     assert 0 < n_jobs <= 9, f"seed fired {n_jobs} jobs"
+
+
+def test_ingest_runs_one_python_pass_per_url(spark):
+    """Streaming ingest keys fed urls with the same fused url_identity_udf
+    as seed(): one Python node, and the rows the single-purpose chain
+    (canonicalize → uh48 + host → domain) gives."""
+    from open_source_search_engine_spark.functions import udfs
+    from open_source_search_engine_spark.streaming.ingest import to_requests
+
+    hostmeta = spark.createDataFrame(
+        [("example.com", 1, None), ("www.sub.example.co.uk", 2, True)],
+        "host string, first_ip long, in_google boolean")
+    feed = spark.createDataFrame(
+        [("HTTP://Example.com/a/../b?x=1#f", 10),
+         ("http://example.com/b?x=1", 11),   # same canonical url
+         ("http://www.sub.example.co.uk/", 12),
+         ("http://unknown.example.org/", 13),  # DNS-fail analog
+         ("", 14), (None, 15), ("mailto:a@example.com", 16)],
+        "url string, added_time_ms long")
+    out = to_requests(feed, hostmeta)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    py = _py_eval_lines(plan)
+    assert len(py) == 1 and "url_identity_udf" in py[0], plan
+    for name in _SINGLE_PURPOSE_UDFS:
+        assert name not in plan, plan
+
+    chain = (feed
+             .withColumn("url", udfs.canonicalize_udf(F.col("url")))
+             .filter(F.length("url") > 0)
+             .withColumn("uh48", udfs.uh48_udf(F.col("url")))
+             .withColumn("host", udfs.host_udf(F.col("url")))
+             .join(hostmeta.select("host"), "host")
+             .withColumn("domain", udfs.domain_udf(F.col("host")))
+             .select("url", "uh48", "host", "domain")
+             .dropDuplicates(["uh48"]))
+    cols = ["url", "uh48", "host", "domain"]
+    got = sorted(tuple(r) for r in out.select(*cols).collect())
+    want = sorted(tuple(r) for r in chain.collect())
+    assert got == want and len(got) == 2, (got, want)
