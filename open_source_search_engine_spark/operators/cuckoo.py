@@ -1,10 +1,12 @@
 """Partitioned Cuckoo-filter URL-seen set (north-star component C5).
 
 The north rule names "a partitioned bloom/cuckoo URL-seen set keyed by
-canonicalized 64-bit URL hashes".  The streaming ingest
-(streaming/ingest.py) builds one over the exact seen set once, probes
-each micro-batch against it, and grows it in place with the batch's
-accepted keys, so no trigger rescans the frontier.  A cuckoo filter
+canonicalized 64-bit URL hashes".  No crawl path routes through it: the
+round and the streaming ingest both check new urls with one exact
+anti-join against the uh48-bucketed url_seen table, which measured
+faster than building, probing and growing a filter first.  The module
+stays as a benchmark operator (perfbench/layers.py times its build,
+probe and insert) until that benchmark drops the probes.  A cuckoo filter
 [Fan et al., CoNEXT'14, "Cuckoo Filter: Practically Better Than Bloom"]
 stores per-key FINGERPRINTS in two candidate buckets; membership and
 in-place insertion are both O(1) per key.
@@ -314,8 +316,8 @@ def cuckoo_insert(cuckoo: DataFrame, adds: DataFrame,
     ``n_applied < n_requested`` (never a partial blob), and blob-less
     partitions with keys surface with n_buckets=0 — either way the
     caller compares the sums and rebuilds from the exact table.  Keys
-    must be new (exactly-once contract — the streaming ingest inserts
-    only rows that survived the exact check)."""
+    must be new (exactly-once contract — insert only keys that
+    survived an exact check)."""
     shift = 48 - partition_bits
     keyed = adds.select(
         "uh48",

@@ -91,11 +91,51 @@ def url_seen_table(workdir: str) -> "SnapshotTable":
     uh48 so the per-round maybe-seen anti-join reuses the scan
     partitioning — only the (small) candidate side exchanges, never the
     10^10-key seen side.  Base dirs are written bucketed at
-    seed/compaction; per-round new-key deltas append as plain parquet
+    seed/compaction; round and ingest new-key deltas append as parquet
     and fold into the base at the next compaction."""
     return SnapshotTable(os.path.join(workdir, "url_seen"),
                          bucket_by=(["uh48"], FRONTIER_BUCKETS),
                          sort_by=["uh48"])
+
+
+def url_seen_synced(workdir: str) -> bool:
+    """True iff url_seen mirrors the CURRENT requests snapshot: every
+    requests write since the last base build appended its url_seen
+    delta, as ``run_round`` and the streaming ingest do.  Any other
+    write (e.g. direct state injection) leaves the lineage stale until
+    the next compaction rebuilds the base."""
+    t = url_seen_table(workdir)
+    if not t.exists():
+        return False
+    m = t.manifest()
+    lin = m["snapshots"].get(str(m["current"]), {}).get("lineage", {})
+    return (lin.get("synced_requests_snapshot") ==
+            frontier_table(workdir, "requests").current_snapshot())
+
+
+def seen_parts(spark: SparkSession, workdir: str,
+               requests: DataFrame | None = None) -> list[DataFrame]:
+    """The exact seen-key set (the spiderdb getUrlHash48 lookup) as uh48
+    relations, one ``left_anti`` join each.  Synced: the bucketed
+    url_seen base (scan-partitioned on uh48 — no seen-side exchange) +
+    the small append deltas, annihilated by the negative keys (a key is
+    seen iff a stored row outlives its newest negative, the requests-
+    side rule).  Unsynced: the annihilated requests scan — ``requests``
+    if the caller read it, else read here; none for an empty frontier."""
+    negs = read_negatives(spark, workdir)
+    if url_seen_synced(workdir):
+        base, delta = url_seen_table(workdir).read_parts(spark)
+        parts = [p for p in (base, delta) if p is not None]
+        if negs is not None:
+            parts = [annihilate(p, negs, "last_added_ms") for p in parts]
+        return [p.select("uh48") for p in parts]
+    if requests is None:
+        requests = frontier_table(workdir, "requests").read(spark)
+        if requests is None:
+            return []
+        if negs is not None:
+            requests = annihilate(requests, negs, "added_time_ms")
+    return [requests.select("uh48")]
 
 
 def read_negatives(spark: SparkSession, workdir: str) -> DataFrame | None:

@@ -9,8 +9,10 @@ round-commit semantics.
 
 Event-time/late-data semantics (SURVEY §2.K): requests carry added_time_ms;
 the scheduler rejects far-future times (corruption filter,
-Spider.cpp:4495-4512), and a watermark on added_time bounds state for the
-dedup aggregation.
+Spider.cpp:4495-4512).  The query keeps no state across triggers: each
+micro-batch is deduped on its own and checked exactly against the
+url_seen set, as a round checks its harvested links, so no watermark is
+needed.
 """
 
 from __future__ import annotations
@@ -20,7 +22,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import joins, udfs
-from ..sources.snapstore import SnapshotTable
+from ..sources.snapstore import (
+    frontier_table, seen_parts, url_seen_synced, url_seen_table, with_salt,
+)
 
 SEED_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -92,8 +96,8 @@ def run_seed_ingest(spark: SparkSession, seed_dir: str, hostmeta_path: str,
                     workdir: str, checkpoint_dir: str,
                     once: bool = True):
     """foreachBatch append into the frontier requests table; exactly-once
-    per micro-batch via the snapshot commit + streaming checkpoint."""
-    import os
+    per micro-batch via the snapshot commit + streaming checkpoint.
+    Returns the query: terminated when ``once``, else running."""
     hostmeta = spark.read.parquet(hostmeta_path)
     # one metadata-cheap count at stream setup feeds the broadcast size
     # gate; it is NOT per-trigger work
@@ -101,109 +105,48 @@ def run_seed_ingest(spark: SparkSession, seed_dir: str, hostmeta_path: str,
     # the canonical frontier constructor: streaming appends are plain
     # parquet deltas either way (bucketing re-established at compaction),
     # but the spec must agree with the batch scheduler's
-    from ..sources.snapstore import (
-        annihilate, frontier_table, read_negatives,
-    )
     table = frontier_table(workdir, "requests")
-    stream = to_requests(seed_stream(spark, seed_dir), hostmeta,
-                         n_hosts=n_hosts)
+    url_seen = url_seen_table(workdir)
 
-    # C5 seen-route for the stream (VERDICT r4 Next #8): the r4 sink
-    # anti-joined EVERY micro-batch against the full requests table — a
-    # frontier scan per trigger.  Now a cuckoo filter is built ONCE at
-    # stream start (one frontier scan), cached, probed per batch
-    # (broadcast blobs + mapInPandas over the tiny batch — no shuffle),
-    # and grown IN PLACE with each batch's accepted keys.  The exact
-    # table is consulted only for maybe-seen rows (a re-fed url or a
-    # ~2^-13 fingerprint collision), so a busy fresh-seed feed never
-    # rescans the frontier.  Routing-only: membership decisions stay
-    # exact.  Lineage records `frontier_scanned` per commit so tests —
-    # and operators — can see the scans that did happen.  Both the build
-    # and the exact check read the requests the round's seen set reads:
-    # negative keys (delete_urls) annihilate older rows first, so a
-    # deleted url fed again after its delete is accepted afresh.
-    bits = 6
-    _state: dict = {"filt": None}
-
-    def _filter_cols(df: DataFrame) -> DataFrame:
-        return df.select("bucket", "n_buckets", "table")
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        c = df.cache()
-        c.count()
-        return c
-
-    def _seen_requests(sess: SparkSession) -> DataFrame | None:
-        existing = table.read(sess)
-        # the negatives manifest decides: no deletes, no extra job
-        negs = read_negatives(sess, workdir)
-        if existing is None or negs is None:
-            return existing
-        return annihilate(existing, negs, "added_time_ms")
-
-    def _init_filter(sess: SparkSession) -> DataFrame:
-        from ..operators.cuckoo import build_cuckoo
-        existing = _seen_requests(sess)
-        seen = existing.select("uh48").distinct() if existing is not None \
-            else sess.createDataFrame([], "uh48 long")
-        return _materialize(build_cuckoo(seen, partition_bits=bits))
-
+    # C1 + C5 per micro-batch, the round's exact seen check: the batch
+    # is keyed and deduped on its own (stateless — nothing carries over
+    # between triggers), then anti-joined against each seen part.
+    # Synced, those are the uh48-bucketed url_seen base (the seen side
+    # is not shuffled) and its deltas; after an out-of-band requests
+    # write, the annihilated requests scan, recorded as
+    # `frontier_scanned` in the commit lineage.  Negative keys
+    # (delete_urls) annihilate older rows first, so a deleted url fed
+    # again after its delete is accepted afresh.  A url fed in an
+    # earlier trigger is in url_seen by now, and a replayed batch finds
+    # its own rows there, so a retry appends nothing twice.
     def sink(batch_df: DataFrame, batch_id: int):
-        from ..operators.cuckoo import cuckoo_insert, cuckoo_maybe_seen
-        from ..sources.snapstore import with_salt
-        if batch_df.isEmpty():
-            return
         sess = batch_df.sparkSession
-        if _state["filt"] is None:
-            _state["filt"] = _init_filter(sess)
-        routed = cuckoo_maybe_seen(batch_df, _state["filt"],
-                                   partition_bits=bits,
-                                   mode="broadcast").persist()
-        accepted = routed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = routed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        scanned = False
-        if not maybe.isEmpty():
-            scanned = True
-            existing = _seen_requests(sess)
-            if existing is not None:
-                maybe = maybe.join(existing.select("uh48").distinct(),
-                                   "uh48", "left_anti")
-            accepted = accepted.unionByName(maybe)
-        accepted = accepted.persist()
-        # ONE accounting job per micro-batch (VERDICT r5 Next #7): the
-        # insert result's summed n_requested IS the accepted count
-        # (keys are unique within a batch — dropDuplicates upstream,
-        # and the accepted/maybe split is disjoint), so the old
-        # separate count() folds into the capacity check.
-        grown = cuckoo_insert(_state["filt"],
-                              accepted.select("uh48"),
-                              partition_bits=bits).persist()
-        row = grown.agg(
-            F.coalesce(F.sum("n_requested"), F.lit(0)).alias("rq"),
-            F.coalesce(F.sum("n_applied"), F.lit(0)).alias("ap")
-        ).collect()[0]
-        n = int(row.rq)
+        empty = not table.exists()
+        synced = url_seen_synced(workdir)
+        accepted = to_requests(batch_df, hostmeta, n_hosts=n_hosts)
+        for p in seen_parts(sess, workdir):
+            accepted = accepted.join(p, "uh48", "left_anti")
+        accepted = with_salt(accepted).persist()
+        n = accepted.count()
         if n:
-            table.append(with_salt(accepted),
-                         {"stream_batch": batch_id,
-                          "source": "seed_stream",
-                          "frontier_scanned": scanned})
-            old = _state["filt"]
-            if n == int(row.ap):
-                _state["filt"] = _materialize(_filter_cols(grown))
-            else:
-                # over capacity: one rebuild from the (post-append)
-                # exact table — the amortized-doubling path
-                _state["filt"] = _init_filter(sess)
-            old.unpersist()
-        grown.unpersist()
+            table.append(accepted, {"stream_batch": batch_id,
+                                    "source": "seed_stream", "rows": n,
+                                    "frontier_scanned": not (synced or
+                                                             empty)})
+            # keep url_seen mirroring requests: a delta when it is
+            # synced, a new base (as seed() writes) when the frontier
+            # was empty; otherwise compaction rebuilds it
+            if synced or empty:
+                (url_seen.overwrite if empty else url_seen.append)(
+                    accepted.select("uh48", F.col("added_time_ms")
+                                    .alias("last_added_ms")),
+                    {"source": "seed_stream", "rows": n,
+                     "synced_requests_snapshot": table.current_snapshot()})
         accepted.unpersist()
-        routed.unpersist()
 
-    writer = (stream.writeStream.foreachBatch(sink)
+    writer = (seed_stream(spark, seed_dir).writeStream.foreachBatch(sink)
               .option("checkpointLocation", checkpoint_dir))
+    q = (writer.trigger(availableNow=True) if once else writer).start()
     if once:
-        q = writer.trigger(availableNow=True).start()
         q.awaitTermination()
-        return None
-    return writer.start()
+    return q

@@ -1,4 +1,5 @@
-"""Plan-shape gate for the streaming ingest's cuckoo seen-filter probe.
+"""Plan-shape gate for the cuckoo seen-filter probe (operators/cuckoo.py,
+a benchmark-only operator: no crawl path routes through it).
 
 The scale contract (VERDICT r4 Wrong #1 closure): probing the filter
 must never replicate the blob onto candidate rows and must never cap

@@ -2,9 +2,9 @@
 
 A url counts as seen iff some stored request of its uh48 outlives the
 uh48's newest negative key (Rdb annihilation, snapstore.annihilate).
-The round checks new links with one exact anti-join against the
-url_seen table (or the requests scan after an out-of-band write); the
-streaming ingest checks its feed against the same annihilated requests.
+The round checks new links, and the streaming ingest its fed urls, with
+one exact anti-join against the url_seen table (or the requests scan
+after an out-of-band write); both keep url_seen synced.
 """
 
 import json
@@ -120,10 +120,11 @@ def test_stream_ingest_accepts_url_fed_after_its_delete(spark, paths,
 
 def test_round_after_stream_ingest_records_seen_path(spark, paths,
                                                      tmp_path):
-    """seen_path is "url_seen" while the seen table mirrors requests,
-    "requests_scan" after a streaming ingest wrote requests out of band,
-    and "url_seen" again once compaction rebuilt the base — in the
-    returned metrics and in the metrics table."""
+    """seen_path is "url_seen" while the seen table mirrors requests —
+    also after a streaming ingest, which appends its url_seen delta —
+    "requests_scan" after a direct requests write broke the sync, and
+    "url_seen" again once compaction rebuilt the base; in the returned
+    metrics and in the metrics table."""
     wd = str(tmp_path / "state")
     drv = _driver(spark, paths, wd)
     assert drv.run_round(0)["seen_path"] == "url_seen"
@@ -134,10 +135,43 @@ def test_round_after_stream_ingest_records_seen_path(spark, paths,
                     paths["hostmeta"], wd, str(tmp_path / "ckpt"),
                     once=True)
     assert drv.t_requests.current_snapshot() == before + 1
-    assert drv.run_round(1)["seen_path"] == "requests_scan"
+    assert drv.run_round(1)["seen_path"] == "url_seen"
+    requests, _, _ = drv._read_state()
+    drv.t_requests.append(requests.limit(1), {"source": "injected"})
+    assert drv.run_round(2)["seen_path"] == "requests_scan"
     compact_frontier(spark, wd)
-    assert drv.run_round(2)["seen_path"] == "url_seen"
+    assert drv.run_round(3)["seen_path"] == "url_seen"
     got = [(r.round, r.seen_path) for r in
            drv.t_metrics.read(spark).orderBy("round").collect()]
-    assert got == [(0, "url_seen"), (1, "requests_scan"),
-                   (2, "url_seen")]
+    assert got == [(0, "url_seen"), (1, "url_seen"),
+                   (2, "requests_scan"), (3, "url_seen")]
+
+
+@pytest.mark.parametrize("seeded", [True, False])
+def test_stream_ingest_keeps_url_seen_synced(spark, paths, tmp_path,
+                                             seeded):
+    """After a streaming ingest the url_seen table still mirrors the
+    requests: into a seeded workdir the ingest appends a delta, into an
+    empty one its first batch writes the base, as seed() does.  The
+    seen parts then hold exactly the stored (annihilated) keys."""
+    wd = str(tmp_path / "state")
+    drv = CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], CFG)
+    rows = [(f"http://host00{i % 3}.com/fresh/{i}.html", CFG.t0_ms)
+            for i in range(4)]
+    if seeded:
+        drv.seed(paths["seeds"])
+        seed = drv.t_requests.read(spark).orderBy("uh48").first()
+        rows.append((seed.url, CFG.t0_ms))  # re-fed: rejected
+        assert drv._url_seen_synced()
+    run_seed_ingest(spark, _feed(tmp_path / "feed", rows),
+                    paths["hostmeta"], wd, str(tmp_path / "ckpt"),
+                    once=True)
+    assert drv._url_seen_synced()
+    requests, _, _ = drv._read_state()
+    stored = [r.uh48 for r in requests.select("uh48").collect()]
+    assert len(stored) == len(set(stored))
+    assert _seen_keys(drv) == set(stored)
+    lin = [s["lineage"] for s in
+           drv.t_requests.manifest()["snapshots"].values()
+           if s["lineage"].get("source") == "seed_stream"]
+    assert [x["frontier_scanned"] for x in lin] == [False]
