@@ -15,9 +15,9 @@ canonical url, uh48, host, domain).  The fused UDFs call the same kernel
 helpers as the single-purpose UDFs below, so their outputs are
 bit-identical.  The single-purpose UDFs remain for their other callers:
 plans/search.py (canonicalize, uh48, host), plans/querylang.py (uh48),
-CrawlDriver.delete_urls (canonicalize + uh48) and _migrate_requests
-(domain), and perfbench (its UDF layer in layers.py, uh48 in
-inputs.py).
+CrawlDriver.delete_urls (canonicalize + uh48), the one-time state
+upgrade compaction.upgrade_legacy_state (domain), and perfbench (its
+UDF layer in layers.py, uh48 in inputs.py).
 
 Scale notes: each UDF receives Arrow record batches
 (spark.sql.execution.arrow.maxRecordsPerBatch rows at a time), so Python

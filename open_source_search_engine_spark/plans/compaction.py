@@ -14,42 +14,47 @@ In production this is an Iceberg ``rewrite_data_files``-style maintenance
 action; with the snapshot store it is an ``overwrite`` commit.  Running it
 every N rounds keeps the per-round dedup windows cheap (the scheduler's
 C2 window then scans ~1 row per url instead of the whole append log).
+
+Beside it sits the one-time upgrade of state written by older drivers
+(``upgrade_legacy_state``): the reference's records are fixed-schema
+packed structs (Spider.h:817) and a schema change there is an offline
+step, so here too it is one rewrite at open, never a per-read fix.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..sources.snapstore import SnapshotTable
+from ..sources.snapstore import (
+    SnapshotTable, frontier_table, read_negatives, url_seen_table, with_salt,
+)
 
-
-def _gkeys(df):
-    """Salted-frontier group key: the same (first_ip,_salt,uh48) triple
-    the scheduler dedups on — a superset of the storage bucket keys, so
-    a compaction re-run over an already-bucketed snapshot re-aggregates
-    without an exchange (uh48→first_ip is functional, so triple-key
-    grouping IS per-uh48 dedup)."""
-    return ["first_ip", "_salt", "uh48"] if "first_ip" in df.columns \
-        else ["uh48"]
+# Salted-frontier group key: the same (first_ip,_salt,uh48) triple the
+# scheduler dedups on — a superset of the storage bucket keys, so a
+# compaction re-run over an already-bucketed snapshot re-aggregates
+# without an exchange (uh48→first_ip is functional, so triple-key
+# grouping IS per-uh48 dedup).
+GKEYS = ["first_ip", "_salt", "uh48"]
 
 
 def compact_replies(spark: SparkSession, table: SnapshotTable,
                     negs=None) -> int:
-    from ..sources.snapstore import annihilate, with_salt
+    from ..sources.snapstore import annihilate
     df = table.read(spark)
     if df is None:
         return 0
     if negs is not None:
         df = annihilate(df, negs, "spidered_time_ms")
-    df = with_salt(df)
-    keys = _gkeys(df)
-    others = [c for c in df.columns if c not in keys]
-    latest = (df.groupBy(*keys).agg(
+    others = [c for c in df.columns if c not in GKEYS]
+    latest = (df.groupBy(*GKEYS).agg(
         F.max_by(F.struct(*[F.col(c) for c in others]),
                  F.struct("spidered_time_ms", "err_code", "err_count",
                           "http_status")).alias("_r"))
-        .select(*keys, *[F.col(f"_r.{c}").alias(c) for c in others]))
+        .select(*GKEYS, *[F.col(f"_r.{c}").alias(c) for c in others]))
     n = latest.count()
     table.overwrite(latest, {"compaction": True, "rows": n})
     return n
@@ -57,14 +62,12 @@ def compact_replies(spark: SparkSession, table: SnapshotTable,
 
 def compact_requests(spark: SparkSession, table: SnapshotTable,
                      negs=None) -> int:
-    from ..sources.snapstore import annihilate, with_salt
+    from ..sources.snapstore import annihilate
     df = table.read(spark)
     if df is None:
         return 0
     if negs is not None:
         df = annihilate(df, negs, "added_time_ms")
-    df = with_salt(df)
-    keys = _gkeys(df)
     # OR-merge the sticky flags across duplicate requests
     # (Spider.cpp:13680-13720 request-inherits-bits semantics); winner
     # row = lexicographic min (hop_count, added_time_ms) — one hash
@@ -72,88 +75,50 @@ def compact_requests(spark: SparkSession, table: SnapshotTable,
     merged_cols = ("is_addurl", "parent_is_rss", "parent_is_sitemap",
                    "discovery_time_ms")
     others = [c for c in df.columns
-              if c not in (*keys, *merged_cols)]
-    merged = (df.groupBy(*keys).agg(
+              if c not in (*GKEYS, *merged_cols)]
+    merged = (df.groupBy(*GKEYS).agg(
         F.min_by(F.struct(*[F.col(c) for c in others]),
                  F.struct("hop_count", "added_time_ms")).alias("_r"),
         F.max("is_addurl").alias("is_addurl"),
         F.max("parent_is_rss").alias("parent_is_rss"),
         F.max("parent_is_sitemap").alias("parent_is_sitemap"),
         F.min("discovery_time_ms").alias("discovery_time_ms"))
-        .select(*keys, *merged_cols,
+        .select(*GKEYS, *merged_cols,
                 *[F.col(f"_r.{c}").alias(c) for c in others]))
     n = merged.count()
     table.overwrite(merged, {"compaction": True, "rows": n})
     return n
 
 
-def compact_inlinks(spark: SparkSession, table: SnapshotTable,
-                    requests=None) -> int:
+def compact_inlinks(spark: SparkSession, table: SnapshotTable) -> int:
     """F3 inlink log → distinct (uh48, parent_cblock) pairs
     (Spider.cpp:4290-4332: the count is distinct C-blocks, capped at 20
     at eval time, so the distinct-pair rewrite is lossless).  Without
     this the append log grows one row per surviving link occurrence per
     round and the per-round countDistinct re-aggregates all history —
     O(total links ever); after compaction storage and scan cost are
-    bounded by the number of distinct (url, C-block) edges.
-
-    Mixed-version healing (ADVICE r5 #3): edges written before the
-    salted layout surface with NULL first_ip/_salt in the union read.
-    When the caller supplies the ``requests`` table, NULL first_ip is
-    healed from its uh48→first_ip map (the mapping is functional) and
-    _salt re-derived, and the per-edge dedup deterministically PREFERS
-    the non-null-first_ip copy — so the compacted snapshot is fully
-    salted and the downstream triple-key counts see every edge."""
-    from ..sources import snapstore as snap
+    bounded by the number of distinct (url, C-block) edges.  first_ip
+    and _salt are functions of uh48, so every copy of an edge carries
+    the same values."""
     df = table.read(spark)
     if df is None:
         return 0
-    if "first_ip" in df.columns:
-        # NULL first_ip only enters via dirs written before the salted
-        # layout (unionByName fills the missing column) — footer-only
-        # schema checks gate the heal join so the common all-salted case
-        # pays no uh48 shuffle
-        legacy_dirs = any(
-            "first_ip" not in spark.read.parquet(p).columns
-            for p in table._data_dirs())
-        if legacy_dirs and requests is not None and \
-                "first_ip" in requests.columns:
-            ipmap = (requests
-                     .groupBy("uh48")
-                     .agg(F.max("first_ip").alias("_fip")))
-            df = (df.join(ipmap, "uh48", "left")
-                  .withColumn("first_ip",
-                              F.coalesce("first_ip", "_fip"))
-                  .drop("_fip"))
-        if "_salt" in df.columns:
-            df = df.withColumn(
-                "_salt",
-                F.coalesce(F.col("_salt"),
-                           F.pmod(F.col("uh48"),
-                                  F.lit(snap.SALT_WIDTH)).cast("int")))
-        else:
-            df = snap.with_salt(df)
-        others = [c for c in df.columns
-                  if c not in ("uh48", "parent_cblock")]
-        merged = (df.groupBy("uh48", "parent_cblock").agg(
-            F.max_by(F.struct(*[F.col(c) for c in others]),
-                     F.struct(F.col("first_ip").isNotNull().cast("int")
-                              .alias("_nn"),
-                              F.coalesce(F.col("first_ip"), F.lit(0))
-                              .alias("_ip"))).alias("_r"))
-            .select("uh48", "parent_cblock",
-                    *[F.col(f"_r.{c}").alias(c) for c in others]))
-    else:
-        merged = df.dropDuplicates(["uh48", "parent_cblock"])
+    merged = df.dropDuplicates(["uh48", "parent_cblock"])
     n = merged.count()
     table.overwrite(merged, {"compaction": True, "rows": n})
     return n
 
 
+def _sync_url_seen(workdir: str, req_t: SnapshotTable, req: DataFrame,
+                   lineage: dict) -> None:
+    """Rebuild the incremental url_seen base (VERDICT r5 Wrong #2) from
+    the requests just written, synced to their snapshot."""
+    url_seen_table(workdir).overwrite(
+        req.select("uh48", F.col("added_time_ms").alias("last_added_ms")),
+        {**lineage, "synced_requests_snapshot": req_t.current_snapshot()})
+
+
 def compact_frontier(spark: SparkSession, workdir: str) -> dict:
-    from ..sources.snapstore import (
-        frontier_table, read_negatives, url_seen_table,
-    )
     # negative keys are removed physically at merge time with the same
     # annihilation rule the reads apply logically (snapstore.annihilate),
     # so a compacted snapshot is READ-EQUIVALENT to the append log it
@@ -164,18 +129,92 @@ def compact_frontier(spark: SparkSession, workdir: str) -> dict:
     n_req = compact_requests(spark, req_t, negs=negs)
     n_rep = compact_replies(spark, frontier_table(workdir, "replies"),
                             negs=negs)
-    # post-compaction requests (one bucketed dir) feed the inlink heal
+    n_inl = compact_inlinks(spark, frontier_table(workdir, "inlinks"))
+    # the compacted requests hold one row per uh48 already (negatives
+    # folded in physically above), so no distinct/groupBy is needed
     req = req_t.read(spark)
-    n_inl = compact_inlinks(spark, frontier_table(workdir, "inlinks"),
-                            requests=req)
-    # rebuild the incremental url_seen base (VERDICT r5 Wrong #2) from
-    # the compacted requests — one row per uh48 already (negatives
-    # folded in physically above), so no distinct/groupBy is needed and
-    # the new base is synced to the fresh requests snapshot
     if req is not None:
-        url_seen_table(workdir).overwrite(
-            req.select("uh48",
-                       F.col("added_time_ms").alias("last_added_ms")),
-            {"compaction": True, "rows": n_req,
-             "synced_requests_snapshot": req_t.current_snapshot()})
+        _sync_url_seen(workdir, req_t, req,
+                       {"compaction": True, "rows": n_req})
     return {"requests": n_req, "replies": n_rep, "inlinks": n_inl}
+
+
+# ---- one-time upgrade of state written by older drivers ---------------
+
+def _legacy(table: SnapshotTable, cols: set[str]) -> bool:
+    """True iff some data dir of ``table`` lacks a column of ``cols`` —
+    read from one parquet footer per dir (pyarrow, no Spark job)."""
+    import pyarrow.parquet as pq
+    for d in table._data_dirs():
+        part = min(f for f in os.listdir(d) if f.endswith(".parquet"))
+        if not cols <= set(pq.read_schema(os.path.join(d, part)).names):
+            return True
+    return False
+
+
+def _default(f: T.StructField):
+    """A column's semantic default: what an older driver's row means
+    where it predates the column."""
+    from ..functions import udfs
+    if f.name == "domain":
+        return udfs.domain_udf(F.col("host"))
+    if f.name == "discovery_time_ms":
+        return F.col("added_time_ms")
+    if isinstance(f.dataType, T.BooleanType):
+        return F.lit(False)
+    if isinstance(f.dataType, T.StringType):
+        return F.lit("")
+    return F.lit(0).cast(f.dataType)
+
+
+def _filled(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Every ``schema`` column present and non-null: a column missing
+    from the read, and the NULLs a mixed-dir union read gives the rows
+    of dirs without it, both take ``_default``.  in_google NULL is
+    MEANINGFUL (tag absent → valid bit off → ingoogle rules skipped), so
+    it is filled only where no dir has the column.  _salt is re-derived
+    (deterministic in uh48)."""
+    for f in schema.fields:
+        if f.name not in df.columns:
+            df = df.withColumn(f.name, _default(f))
+        elif f.name != "in_google":
+            df = df.withColumn(f.name,
+                               F.coalesce(F.col(f.name), _default(f)))
+    return with_salt(df.drop("_salt"))
+
+
+def upgrade_legacy_state(spark: SparkSession, workdir: str) -> list[str]:
+    """Rewrite each frontier table that has a data dir written by an
+    older driver into one bucketed snapshot in the current schema, then
+    re-sync url_seen as compaction does; returns the upgraded tables.
+    Current state costs one footer read per data dir and no Spark job.
+
+    requests/replies take the column defaults above; inlinks written
+    before the salted layout take first_ip from the requests' uh48 →
+    first_ip map (functional: one canonical url, one resolved IP).  Rows
+    are kept as they are (no dedup, no annihilation), so the store reads
+    the same before and after."""
+    from .scheduler import REPLY_SCHEMA, REQUEST_SCHEMA
+    done = []
+    for name, schema in (("requests", REQUEST_SCHEMA),
+                         ("replies", REPLY_SCHEMA)):
+        t = frontier_table(workdir, name)
+        if _legacy(t, {*schema.fieldNames(), "_salt"}):
+            t.overwrite(_filled(t.read(spark), schema), {"upgrade": True})
+            done.append(name)
+    req_t = frontier_table(workdir, "requests")
+    inl_t = frontier_table(workdir, "inlinks")
+    if _legacy(inl_t, {"uh48", "parent_cblock", "first_ip", "_salt"}):
+        inl = inl_t.read(spark)
+        fip = F.col("first_ip") if "first_ip" in inl.columns \
+            else F.lit(None).cast("long")
+        ipmap = (req_t.read(spark).groupBy("uh48")
+                 .agg(F.max("first_ip").alias("_fip")))
+        inl = (inl.join(ipmap, "uh48", "left")
+               .select("uh48", "parent_cblock",
+                       F.coalesce(fip, F.col("_fip")).alias("first_ip")))
+        inl_t.overwrite(with_salt(inl), {"upgrade": True})
+        done.append("inlinks")
+    if done and req_t.exists():
+        _sync_url_seen(workdir, req_t, req_t.read(spark), {"upgrade": True})
+    return done

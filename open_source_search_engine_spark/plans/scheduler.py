@@ -57,6 +57,8 @@ from ..sources.snapstore import (
     SnapshotTable, annihilate, read_negatives, seen_parts, url_seen_synced,
     with_salt,
 )
+from ..streaming.ingest import host_dim, in_google_col, to_requests
+from .compaction import upgrade_legacy_state
 
 
 def path_cgi_col(url):
@@ -144,6 +146,9 @@ class CrawlDriver:
         # requests scan until the next compaction rebuilds the base.
         from ..sources.snapstore import url_seen_table
         self.t_url_seen = url_seen_table(workdir)
+        # one schema at rest: a store written by an older driver is
+        # rewritten once here, so no read below migrates anything
+        upgrade_legacy_state(spark, workdir)
         self.pages = spark.read.parquet(pages_path)
         self.hostmeta = spark.read.parquet(hostmeta_path)
         # ONE init job: host count (broadcast size gate) + a robots
@@ -201,65 +206,15 @@ class CrawlDriver:
             df, self._n_hosts, max_bytes=self.cfg.broadcast_host_max_bytes)
 
     # ------------------------------------------------------------------
-    def _ingoogle_cols(self) -> list[str]:
-        """m_inGoogle's in-crawl source (Spider.cpp:12182-12205: the bit
-        comes from the site's TagRec): when the ingested hostmeta —
-        this rebuild's tagdb analog — carries an ``in_google`` column,
-        every request threads it through; NULL = site has no tag =
-        valid bit off, and ingoogle rules are SKIPPED for the row
-        exactly like hascontactinfo without a reply."""
-        return ["in_google"] if "in_google" in self.hostmeta.columns \
-            else []
-
-    def _ingoogle_col(self):
-        if "in_google" in self.hostmeta.columns:
-            return F.col("in_google").cast("boolean").alias("in_google")
-        # no tagdb source ingested: the pre-round-5 always-valid-False
-        # model (COVERAGE.md deviation, now closed when the column is
-        # supplied)
-        return F.lit(False).alias("in_google")
-
     def seed(self, seeds_path: str) -> int:
-        """Inject seeds (A1: SpiderRequest::setFromAddUrl analog)."""
+        """Inject seeds (A1: SpiderRequest::setFromAddUrl analog) — the
+        same add-url rows the streaming ingest writes."""
         if self.t_requests.exists():
             return 0
-        seeds = self.spark.read.parquet(seeds_path)
-        # one Python pass per seed url: canonical url, uh48, host, domain
-        reqs = (
-            seeds
-            .withColumn("_id", udfs.url_identity_udf(F.col("url")))
-            .select("_id.*", "added_time_ms")
-            .filter(F.length("url") > 0)
-            .join(self._bcast_hosts(
-                      self.hostmeta.select("host", "first_ip",
-                                           *self._ingoogle_cols())),
-                  "host", "inner")  # unknown host = DNS failure → dropped
-            .select(
-                "url", "uh48",
-                F.col("first_ip").cast("long").alias("first_ip"),
-                "host", "domain",
-                F.lit(0).alias("hop_count"),
-                F.col("added_time_ms").cast("long"),
-                F.col("added_time_ms").cast("long")
-                 .alias("discovery_time_ms"),
-                F.lit(True).alias("is_addurl"),
-                F.lit(False).alias("is_injected"),
-                F.lit(False).alias("is_reindex"),
-                F.lit(False).alias("same_dom"),
-                F.lit(False).alias("same_host"),
-                F.lit(False).alias("parent_is_rss"),
-                F.lit(False).alias("parent_is_sitemap"),
-                F.lit(0).alias("page_num_inlinks"),
-                F.lit(False).alias("is_rss"),
-                F.lit(False).alias("is_new_outlink"),
-                F.lit(False).alias("was_parent_indexed"),
-                F.lit(False).alias("is_docid_based"),
-                F.lit(False).alias("has_authority_inlink"),
-                self._ingoogle_col(),
-                F.lit(False).alias("parent_is_pingserver"),
-            )
-            .dropDuplicates(["uh48"])
-        )
+        reqs = to_requests(
+            self.spark.read.parquet(seeds_path), self.hostmeta,
+            n_hosts=self._n_hosts,
+            broadcast_max_bytes=self.cfg.broadcast_host_max_bytes)
         # stored skew-salt (salted layout); persisted so the count, the
         # requests append and the url_seen base read the same rows
         reqs = budget_ops._pin(with_salt(reqs), None)
@@ -280,73 +235,15 @@ class CrawlDriver:
         return n
 
     # ------------------------------------------------------------------
-    def _migrate_requests(self, df: DataFrame,
-                          heal: bool = False) -> DataFrame:
-        """Read-side schema evolution: request snapshots written by an
-        older driver version may lack later REQUEST_SCHEMA columns (the
-        round-2 flag bits, domain).  Fill them with their semantic
-        defaults instead of feeding nulls into boolean rule predicates
-        or the domainpages quota key.  ``heal=True`` (multi-dir append
-        logs, where unionByName surfaces older dirs' missing columns as
-        nulls) additionally coalesces per-row nulls to the same
-        defaults; single-dir bucketed snapshots skip it so their scan
-        attributes — and the reported partitioning — stay untouched."""
-        def default_of(f):
-            if f.name == "domain":
-                return udfs.domain_udf(F.col("host"))
-            if f.name == "discovery_time_ms":
-                return F.col("added_time_ms")
-            if isinstance(f.dataType, T.BooleanType):
-                return F.lit(False)
-            return F.lit(0).cast(f.dataType)
-
-        for f in REQUEST_SCHEMA.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, default_of(f))
-            elif heal and f.name != "in_google":
-                # in_google NULL is MEANINGFUL (tag absent → valid bit
-                # off → ingoogle rules skipped) — never heal it to False
-                df = df.withColumn(
-                    f.name, F.coalesce(F.col(f.name), default_of(f)))
-        return df
-
-    def _migrate_replies(self, df: DataFrame,
-                         heal: bool = False) -> DataFrame:
-        """Fill REPLY_SCHEMA columns missing from older snapshots (and,
-        with ``heal``, per-row nulls from mixed-version append logs)."""
-        def default_of(f):
-            if isinstance(f.dataType, T.BooleanType):
-                return F.lit(False)
-            if isinstance(f.dataType, T.StringType):
-                return F.lit("")
-            return F.lit(0).cast(f.dataType)
-
-        for f in REPLY_SCHEMA.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, default_of(f))
-            elif heal:
-                df = df.withColumn(
-                    f.name, F.coalesce(F.col(f.name), default_of(f)))
-        return df
-
     def _read_state(self):
         requests = self.t_requests.read(self.spark)
-        if requests is not None:
-            requests = self._migrate_requests(
-                requests, heal=len(self.t_requests._data_dirs()) > 1)
         replies = self.t_replies.read(self.spark)
-        if replies is not None:
-            replies = self._migrate_replies(
-                replies, heal=len(self.t_replies._data_dirs()) > 1)
-        ip_state = self.t_ip_state.read(self.spark)
         if replies is None:
-            replies = self.spark.createDataFrame([], REPLY_SCHEMA)
+            replies = with_salt(self.spark.createDataFrame([], REPLY_SCHEMA))
+        ip_state = self.t_ip_state.read(self.spark)
         if ip_state is None:
             ip_state = self.spark.createDataFrame(
                 [], "first_ip long, last_download_ms long")
-        requests = self._ensure_salt(requests, self.t_requests) \
-            if requests is not None else None
-        replies = self._ensure_salt(replies, self.t_replies)
         # H8: negative keys annihilate OLDER records of the same uh48
         # (Rdb merge semantics — records added after the negative
         # survive, so a deleted-then-rediscovered url crawls fresh).
@@ -358,27 +255,6 @@ class CrawlDriver:
             requests = annihilate(requests, negs, "added_time_ms")
             replies = annihilate(replies, negs, "spidered_time_ms")
         return requests, replies, ip_state
-
-    @staticmethod
-    def _ensure_salt(df: DataFrame, table: "SnapshotTable") -> DataFrame:
-        """Guarantee a non-null stored ``_salt`` without disturbing a
-        bucketed scan: absent column → stamp (pre-salted-layout
-        snapshot); present + single data dir → trust it untouched (a
-        coalesce would re-alias the attribute and erase the scan's
-        reported (first_ip,_salt) partitioning); present + multi-dir
-        append log → heal possible nulls from older dirs (unionByName
-        fills missing columns with null)."""
-        from ..sources import snapstore as snap
-        if "_salt" not in df.columns:
-            return snap.with_salt(df)
-        if len(table._data_dirs()) > 1:
-            df = df.withColumn(
-                "_salt",
-                F.coalesce(
-                    F.col("_salt"),
-                    F.pmod(F.col("uh48"), F.lit(snap.SALT_WIDTH))
-                    .cast("int")))
-        return df
 
     def delete_urls(self, urls: DataFrame,
                     at_ms: int | None = None) -> int:
@@ -466,48 +342,23 @@ class CrawlDriver:
                 cand = cand.withColumn("site_num_inlinks", F.lit(0))
         return cand
 
-    def _inlink_counts(self, gkeys: list[str]):
+    def _inlink_counts(self, gkeys: list[str]) -> DataFrame:
         """F3 per-url inlink count = distinct parent C-blocks, cap 20
-        (Spider.cpp:4290-4332); counts as of round start.  Salted-layout
-        inlinks (stamped with the TARGET's first_ip at discovery)
-        group+join on the triple — exchange-free against the bucketed
-        scan; pre-salted snapshots fall back to the uh48-keyed shuffle
-        join.  The triple branch requires EVERY data dir to physically
-        carry first_ip (ADVICE r5 #1: a mixed-version union surfaces
-        old dirs' missing column as NULL first_ip, which _ensure_salt
-        cannot heal — the triple-key group/join would silently drop
-        those rows' counts); _salt alone is healable (deterministic in
-        uh48).  Returns (counts_df with _n_inlinks, join keys)."""
+        (Spider.cpp:4290-4332); counts as of round start.  Inlinks are
+        stamped with the TARGET's first_ip at discovery and share the
+        salted frontier layout, so they group and join on the ``gkeys``
+        triple — exchange-free against the bucketed scan.  No inlinks
+        yet: an empty relation with the same columns, so the keying
+        never changes.  Returns the counts as ``_n_inlinks``."""
         inlinks = self.t_inlinks.read(self.spark)
         if inlinks is None:
             inlinks = self.spark.createDataFrame(
-                [], "uh48 long, parent_cblock long")
-        if self._inlinks_salted(inlinks):
-            inlinks = self._ensure_salt(inlinks, self.t_inlinks)
-            ikeys = gkeys
-        else:
-            ikeys = ["uh48"]
-        counts = (inlinks.groupBy(*ikeys)
-                  .agg(F.least(F.countDistinct("parent_cblock"),
-                               F.lit(20)).cast("int")
-                       .alias("_n_inlinks")))
-        return counts, ikeys
-
-    def _inlinks_salted(self, inlinks: DataFrame) -> bool:
-        """True iff the inlinks table can group/join on the salted triple:
-        the union carries the columns AND every data dir physically has
-        first_ip (footer-only schema checks, one per append dir).  A dir
-        written before the salted layout would otherwise contribute NULL
-        first_ip rows that never match the triple key (ADVICE r5 #1)."""
-        if not {"first_ip", "_salt"} <= set(inlinks.columns):
-            return False
-        dirs = self.t_inlinks._data_dirs()
-        if len(dirs) <= 1:
-            return True
-        for d in dirs:
-            if "first_ip" not in self.spark.read.parquet(d).columns:
-                return False
-        return True
+                [], "uh48 long, first_ip long, parent_cblock long, "
+                    "_salt int")
+        return (inlinks.groupBy(*gkeys)
+                .agg(F.least(F.countDistinct("parent_cblock"),
+                             F.lit(20)).cast("int")
+                     .alias("_n_inlinks")))
 
     # ---- the packed request-flag word (VERDICT r5 Wrong #1) ----------
     # The reference computes url-derived predicate bits ONCE at
@@ -700,7 +551,7 @@ class CrawlDriver:
 
         # ---- F3: per-url inlink count = distinct parent C-blocks, cap 20
         # (Spider.cpp:4290-4332); counts as of round start
-        inlink_counts, ikeys = self._inlink_counts(gkeys)
+        inlink_counts = self._inlink_counts(gkeys)
 
         # ---- 3. rule table (compiled F.when chain) --------------------
         now_s = now_ms // 1000
@@ -712,7 +563,7 @@ class CrawlDriver:
             .filter(F.col("_p_sane_url") &
                     (F.col("added_time_ms") <=
                      F.lit(now_ms + 86_400_000)))
-            .join(inlink_counts, ikeys, "left")
+            .join(inlink_counts, gkeys, "left")
             .withColumn("page_num_inlinks",
                         F.coalesce("_n_inlinks", F.lit(0)))
             .drop("_n_inlinks")
@@ -1080,9 +931,7 @@ class CrawlDriver:
             deduped = deduped.join(p, "uh48", "left_anti")
         new_requests = (
             deduped
-            .join(self._bcast_hosts(
-                      self.hostmeta.select("host", "first_ip",
-                                           *self._ingoogle_cols())),
+            .join(self._bcast_hosts(host_dim(self.hostmeta)),
                   "host", "inner")  # unknown host = DNS failure
             .select(
                 "url", "uh48",
@@ -1106,7 +955,7 @@ class CrawlDriver:
                 F.lit(True).alias("was_parent_indexed"),
                 F.lit(False).alias("is_docid_based"),
                 F.lit(False).alias("has_authority_inlink"),
-                self._ingoogle_col(),
+                in_google_col(self.hostmeta),
                 # m_parentIsPingServer (Spider.cpp:12207-12211)
                 Fc.is_ping_server_col(F.col("parent_url"))
                 .alias("parent_is_pingserver"),

@@ -119,7 +119,8 @@ def pack_request_flags(df: DataFrame) -> DataFrame:
 
 def gen_replies_for(frontier: DataFrame, fraction_seen: float = 0.3,
                     seed: int = 42) -> DataFrame:
-    """A latest-reply set for ~fraction of the frontier (deterministic)."""
+    """A latest-reply set for ~fraction of the frontier (deterministic),
+    with every plans/scheduler.REPLY_SCHEMA column."""
     t0 = 1_600_000_000_000
     h = F.xxhash64("uh48", F.lit(seed + 7))
     seen = frontier.filter(
@@ -138,4 +139,9 @@ def gen_replies_for(frontier: DataFrame, fraction_seen: float = 0.3,
         F.lit(200).alias("http_status"),
         F.lit(True).alias("is_indexed"),
         F.lit("en").alias("lang"),
+        F.lit(0).alias("content_hash32"),
+        F.lit(0.0).alias("percent_changed_per_day"),
+        F.lit(0).alias("new_requests"),
+        F.lit(False).alias("has_contact_info"),
+        F.lit(False).alias("has_address"),
     )

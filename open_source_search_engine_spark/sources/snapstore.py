@@ -234,12 +234,6 @@ class SnapshotTable:
                    bucketed: bool = False) -> tuple[str, dict]:
         name = f"snap-{snap_hint:06d}"
         out = os.path.join(self.path, name)
-        if bucketed and self.bucket_by is not None and \
-                not set(self.bucket_by[0]) <= set(df.columns):
-            # pre-salted-layout snapshot without the bucket columns
-            # (e.g. an old inlinks table with no first_ip): keep the
-            # rewrite, skip the clustering — next fresh data is bucketed
-            bucketed = False
         if bucketed and self.bucket_by is not None:
             cols, n = self.bucket_by
             spark = df.sparkSession
@@ -314,11 +308,13 @@ class SnapshotTable:
                     spec = json.load(f)
                 return self._read_bucketed(spark, dirs[0], spec)
             return spark.read.parquet(dirs[0])
-        # multi-dir (append log): dirs written by different driver
-        # versions may differ in schema; a bare multi-path read takes
-        # one footer's schema nondeterministically.  Union by name with
-        # missing columns as null — the scheduler's read-side migration
-        # then fills the semantic defaults.
+        # multi-dir (append log): writers may order their columns
+        # differently, and a bare multi-path read takes one footer's
+        # schema nondeterministically — union by name.  The frontier
+        # tables hold one schema at rest (compaction.upgrade_legacy_state
+        # rewrites older dirs at driver open), so no column is missing
+        # there; small tables may still gain a column over time, read
+        # as null in older dirs.
         out = spark.read.parquet(dirs[0])
         for d in dirs[1:]:
             out = out.unionByName(spark.read.parquet(d),

@@ -38,12 +38,35 @@ def seed_stream(spark: SparkSession, seed_dir: str) -> DataFrame:
             .json(seed_dir))
 
 
+def host_dim(hostmeta: DataFrame) -> DataFrame:
+    """The host dimension every request builder joins: host → first_ip,
+    plus the site's ``in_google`` tag when hostmeta carries one."""
+    return hostmeta.select(
+        "host", "first_ip",
+        *[c for c in ("in_google",) if c in hostmeta.columns])
+
+
+def in_google_col(hostmeta: DataFrame):
+    """m_inGoogle's in-crawl source (Spider.cpp:12182-12205: the bit
+    comes from the site's TagRec).  With an ``in_google`` hostmeta
+    column (this rebuild's tagdb analog) every request threads it
+    through: NULL = site has no tag = valid bit off, and ingoogle rules
+    are SKIPPED for the row exactly like hascontactinfo without a reply.
+    Without the column: the always-valid False model, as the oracle's
+    add_url writes it."""
+    if "in_google" in hostmeta.columns:
+        return F.col("in_google").cast("boolean").alias("in_google")
+    return F.lit(False).alias("in_google")
+
+
 def to_requests(stream: DataFrame, hostmeta: DataFrame,
                 n_hosts: int | None = None,
                 broadcast_max_bytes: int =
                 joins.DEFAULT_BROADCAST_MAX_BYTES) -> DataFrame:
-    """Canonicalize → uh48 + host + domain (one url_identity_udf pass, as
-    the batch seeder) → first_ip; drop unknown hosts (DNS-fail analog).
+    """Add-url rows (SpiderRequest::setFromAddUrl analog), the one
+    builder behind both ``CrawlDriver.seed`` and the streaming ingest:
+    canonicalize → uh48 + host + domain (one url_identity_udf pass) →
+    first_ip; drop unknown hosts (DNS-fail analog); one row per uh48.
 
     The hostmeta join is broadcast ONLY when the caller supplies a host
     count whose estimated bytes fit the driver budget (same size gate as
@@ -51,10 +74,8 @@ def to_requests(stream: DataFrame, hostmeta: DataFrame,
     streaming trigger that unconditionally broadcast 10^7-10^9 hosts
     would OOM the driver every micro-batch (VERDICT r3 item 3).  With
     n_hosts unknown, no hint: Spark decides by measured size."""
-    ig = ["in_google"] if "in_google" in hostmeta.columns else []
     dim = joins.broadcast_if_small(
-        hostmeta.select("host", "first_ip", *ig),
-        n_hosts, max_bytes=broadcast_max_bytes)
+        host_dim(hostmeta), n_hosts, max_bytes=broadcast_max_bytes)
     out = (
         stream
         # one Python pass per fed url: canonical url, uh48, host, domain
@@ -82,10 +103,8 @@ def to_requests(stream: DataFrame, hostmeta: DataFrame,
             F.lit(False).alias("was_parent_indexed"),
             F.lit(False).alias("is_docid_based"),
             F.lit(False).alias("has_authority_inlink"),
-            # m_inGoogle rides from the hostmeta tag when ingested
-            # (nullable: no tag = valid bit off), like the batch seeder
-            *([F.col("in_google").cast("boolean").alias("in_google")]
-              if ig else []),
+            in_google_col(hostmeta),
+            F.lit(False).alias("parent_is_pingserver"),
         )
         .dropDuplicates(["uh48"])  # per-batch dup cache (C1)
     )

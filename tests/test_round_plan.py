@@ -301,3 +301,111 @@ def test_ingest_runs_one_python_pass_per_url(spark):
     got = sorted(tuple(r) for r in out.select(*cols).collect())
     want = sorted(tuple(r) for r in chain.collect())
     assert got == want and len(got) == 2, (got, want)
+
+
+def _untagged_hostmeta(paths, tmp_path) -> str:
+    """The corpus hostmeta without its in_google tag column."""
+    import pandas as pd
+    p = str(tmp_path / "hostmeta_untagged.parquet")
+    pd.read_parquet(paths["hostmeta"]).drop(columns="in_google") \
+        .to_parquet(p, index=False)
+    return p
+
+
+def _feed_dir(dir_, rows) -> str:
+    import json
+    dir_.mkdir()
+    with open(dir_ / "feed.json", "w") as f:
+        for url, t in rows:
+            f.write(json.dumps({"url": url, "added_time_ms": int(t)}) + "\n")
+    return str(dir_)
+
+
+@pytest.mark.parametrize("tagged", [True, False])
+def test_seed_and_ingest_write_identical_request_rows(spark, tmp_path,
+                                                      tagged):
+    """seed() and the streaming ingest build add-url rows through one
+    builder: the same seed urls, into two fresh workdirs, give identical
+    request rows over every column — with an in_google hostmeta tag
+    (True, False and no tag among the seeds' hosts) and without one
+    (every row False, as the oracle's add_url writes it)."""
+    import pandas as pd
+
+    from open_source_search_engine_spark.sources.snapstore import (
+        frontier_table,
+    )
+    from open_source_search_engine_spark.streaming.ingest import (
+        run_seed_ingest,
+    )
+    paths = synthweb.write_corpus(str(tmp_path / "corpus"), n_hosts=10,
+                                  mean_pages=2, n_seeds=10)
+    hm = paths["hostmeta"] if tagged else _untagged_hostmeta(paths,
+                                                             tmp_path)
+    drv = CrawlDriver(spark, str(tmp_path / "seeded"), paths["pages"], hm,
+                      CFG)
+    assert drv.seed(paths["seeds"]) == 10
+    seeds = pd.read_parquet(paths["seeds"])
+    run_seed_ingest(spark, _feed_dir(tmp_path / "feed",
+                                     zip(seeds.url, seeds.added_time_ms)),
+                    hm, str(tmp_path / "ingested"), str(tmp_path / "ckpt"),
+                    once=True)
+
+    def rows(wd):
+        df = frontier_table(wd, "requests").read(spark)
+        return {r.uh48: r.asDict() for r in df.collect()}
+
+    seeded, ingested = rows(str(tmp_path / "seeded")), \
+        rows(str(tmp_path / "ingested"))
+    assert seeded == ingested and len(seeded) == 10
+    igs = {r["in_google"] for r in seeded.values()}
+    assert igs == ({True, False, None} if tagged else {False})
+
+
+def test_state_holds_one_schema(spark, tmp_path):
+    """seed → two rounds → a streaming ingest → compaction: every data
+    dir of requests, replies and inlinks carries its table's full column
+    set, and the state read over the multi-dir append logs has no
+    per-column code — no coalesce on any request or reply column."""
+    from open_source_search_engine_spark.plans.compaction import (
+        compact_frontier,
+    )
+    from open_source_search_engine_spark.plans.scheduler import (
+        REPLY_SCHEMA, REQUEST_SCHEMA,
+    )
+    from open_source_search_engine_spark.streaming.ingest import (
+        run_seed_ingest,
+    )
+    paths = synthweb.write_corpus(str(tmp_path / "corpus"), n_hosts=6,
+                                  mean_pages=5, n_seeds=3)
+    hm = _untagged_hostmeta(paths, tmp_path)
+    wd = str(tmp_path / "state")
+    drv = CrawlDriver(spark, wd, paths["pages"], hm, CFG)
+    drv.seed(paths["seeds"])
+    drv.run(2)
+    urls = [r.url for r in drv.pages.select("url").collect()]
+    run_seed_ingest(spark, _feed_dir(tmp_path / "feed",
+                                     [(u, CFG.t0_ms) for u in urls]),
+                    hm, wd, str(tmp_path / "ckpt"), once=True)
+
+    want = {drv.t_requests: {*REQUEST_SCHEMA.fieldNames(), "_salt"},
+            drv.t_replies: {*REPLY_SCHEMA.fieldNames(), "_salt"},
+            drv.t_inlinks: {"uh48", "parent_cblock", "first_ip", "_salt"}}
+
+    def assert_one_schema():
+        for t, cols in want.items():
+            dirs = t._data_dirs()
+            assert dirs, t.path
+            for d in dirs:
+                assert set(spark.read.parquet(d).columns) == cols, d
+
+    assert len(drv.t_requests._data_dirs()) > 2
+    assert len(drv.t_replies._data_dirs()) > 1
+    requests, replies, _ = drv._read_state()
+    for df in (requests, replies):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "coalesce(" not in plan, plan
+    assert_one_schema()
+    assert requests.filter("in_google is null").count() == 0
+
+    compact_frontier(spark, wd)
+    assert_one_schema()

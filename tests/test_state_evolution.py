@@ -2,13 +2,16 @@
 invalidated when the hostmeta robots content or the user agent changes
 (the cache-expiry analog of the reference's 24h per-host robots cache,
 Msg13.cpp:590-591), and request snapshots written by an older driver
-version (missing later REQUEST_SCHEMA columns) must resume cleanly with
-semantic defaults instead of feeding nulls into rule predicates."""
+version (missing later REQUEST_SCHEMA/REPLY_SCHEMA columns) must be
+upgraded once at driver open and resume cleanly with semantic defaults
+instead of feeding nulls into rule predicates."""
 
 import pandas as pd
 
 from open_source_search_engine_spark.oracle.crawler import CrawlConfig
-from open_source_search_engine_spark.plans.scheduler import CrawlDriver
+from open_source_search_engine_spark.plans.scheduler import (
+    REPLY_SCHEMA, REQUEST_SCHEMA, CrawlDriver,
+)
 from open_source_search_engine_spark.sources import synthweb
 
 
@@ -62,9 +65,45 @@ def test_user_agent_change_rebuilds_cache(spark, tmp_path):
     assert drv_ua.t_robots.current_snapshot() == snap1 + 1
 
 
+def _footers(table) -> list[set]:
+    """Column names of one parquet footer per data dir of ``table``."""
+    import os
+
+    import pyarrow.parquet as pq
+    out = []
+    for d in table._data_dirs():
+        part = min(f for f in os.listdir(d) if f.endswith(".parquet"))
+        out.append(set(pq.read_schema(os.path.join(d, part)).names))
+    return out
+
+
+def _state_snapshots(wd) -> dict:
+    """Current snapshot id of every table under the workdir."""
+    import os
+
+    from open_source_search_engine_spark.sources.snapstore import (
+        SnapshotTable,
+    )
+    return {t: SnapshotTable(os.path.join(wd, t)).current_snapshot()
+            for t in sorted(os.listdir(wd))
+            if os.path.isdir(os.path.join(wd, t))}
+
+
+REQUEST_COLS = {*REQUEST_SCHEMA.fieldNames(), "_salt"}
+REPLY_COLS = {*REPLY_SCHEMA.fieldNames(), "_salt"}
+
+
 def test_legacy_request_snapshot_resume(spark, tmp_path):
-    """Requests written without the round-2 columns (domain + flag bits)
-    resume with defaults — no nulls, no AnalysisException."""
+    """State written by an older driver — requests without the round-2
+    columns (domain + flag bits), a requests dir without _salt, replies
+    without content_hash32/new_requests/has_contact_info — is upgraded
+    once when a driver opens it and resumes with defaults: no nulls, no
+    AnalysisException.  A second open commits nothing and the upgrade
+    check fires no Spark job."""
+    from pyspark.sql import functions as F
+
+    from open_source_search_engine_spark.plans import compaction
+
     d = str(tmp_path / "corpus")
     paths = synthweb.write_corpus(d, n_hosts=6, mean_pages=4, n_seeds=3)
     cfg = CrawlConfig(rounds=2, budget=40)
@@ -77,8 +116,41 @@ def test_legacy_request_snapshot_resume(spark, tmp_path):
         "domain", "is_rss", "is_new_outlink", "was_parent_indexed",
         "is_docid_based", "has_authority_inlink")
     drv.t_requests.overwrite(legacy, {"legacy_schema": True})
+    # ... plus an unsalted append dir repeating some of those rows
+    drv.t_requests.append(
+        drv.t_requests.read(spark)
+        .filter(F.pmod(F.col("uh48"), F.lit(2)) == 0).drop("_salt"),
+        {"legacy_schema": True})
+    drv.t_replies.overwrite(
+        drv.t_replies.read(spark).drop(
+            "content_hash32", "new_requests", "has_contact_info"),
+        {"legacy_schema": True})
+    assert not all(REQUEST_COLS <= c for c in _footers(drv.t_requests))
+    assert not all(REPLY_COLS <= c for c in _footers(drv.t_replies))
+    n_req = drv.t_requests.read(spark).count()
 
     drv2 = CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], cfg)
+    assert _footers(drv2.t_requests) == [REQUEST_COLS]
+    assert _footers(drv2.t_replies) == [REPLY_COLS]
+    assert drv2._url_seen_synced()
+    req, rep, _ = drv2._read_state()
+    assert req.count() == n_req  # rows kept as they were
+    assert req.filter("domain is null or is_rss is null or _salt is null "
+                      "or _salt != pmod(uh48, 16)").count() == 0
+    assert rep.filter("content_hash32 != 0 or new_requests != 0 or "
+                      "has_contact_info or _salt is null").count() == 0
+
+    snaps = _state_snapshots(wd)
+    sc = spark.sparkContext
+    sc.setJobGroup("upgrade-check", "second upgrade check")
+    try:
+        assert compaction.upgrade_legacy_state(spark, wd) == []
+    finally:
+        sc.setJobGroup("", "")
+    assert not sc.statusTracker().getJobIdsForGroup("upgrade-check")
+    CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], cfg)
+    assert _state_snapshots(wd) == snaps
+
     m = drv2.run_round(drv2.current_round())
     assert m["scheduled"] > 0
     req = drv2._read_state()[0]
@@ -89,9 +161,9 @@ def test_legacy_request_snapshot_resume(spark, tmp_path):
 def test_mixed_version_inlinks_not_dropped(spark, tmp_path):
     """ADVICE r5 #1/#3: an inlinks append log mixing a legacy dir
     (no first_ip/_salt) with salted dirs must not drop the legacy edges
-    from page_num_inlinks (the triple-key branch would never match their
-    NULL first_ip), and compaction must heal first_ip from the requests
-    table so the compacted snapshot is deterministically salted."""
+    from page_num_inlinks: opening a driver upgrades the log, healing
+    first_ip from the requests table, so the triple-key counts see every
+    edge and the compacted snapshot is deterministically salted."""
     from pyspark.sql import functions as F
 
     from open_source_search_engine_spark.plans import compaction
@@ -112,18 +184,22 @@ def test_mixed_version_inlinks_not_dropped(spark, tmp_path):
     legacy = inl.filter(marker).select("uh48", "parent_cblock")
     fresh = inl.filter(~marker)
     assert legacy.count() > 0 and fresh.count() > 0
-    drv.t_inlinks.overwrite(legacy, {"legacy_schema": True})
-    drv.t_inlinks.append(fresh, {"salted": True})
+    legacy.write.parquet(str(tmp_path / "legacy_inlinks"))
+    drv.t_inlinks.overwrite(fresh, {"salted": True})
+    # a legacy dir carries no bucket columns: commit it as an append
+    drv.t_inlinks.append(spark.read.parquet(str(tmp_path / "legacy_inlinks")),
+                         {"legacy_schema": True})
 
     mixed = drv.t_inlinks.read(spark)
-    assert not drv._inlinks_salted(mixed)  # falls back to uh48 keys
+    inlink_cols = {"uh48", "parent_cblock", "first_ip", "_salt"}
+    assert _footers(drv.t_inlinks) == [inlink_cols,
+                                       {"uh48", "parent_cblock"}]
 
     def counts_of(driver):
         # the counts exactly as _candidates consumes them (shared
         # helper — the candidate output itself no longer carries
         # page_num_inlinks past the rule stage)
-        counts, ikeys = driver._inlink_counts(
-            ["first_ip", "_salt", "uh48"])
+        counts = driver._inlink_counts(["first_ip", "_salt", "uh48"])
         return {r.uh48: r._n_inlinks
                 for r in counts.select("uh48", "_n_inlinks").collect()}
 
@@ -131,16 +207,19 @@ def test_mixed_version_inlinks_not_dropped(spark, tmp_path):
             (mixed.groupBy("uh48")
              .agg(F.least(F.countDistinct("parent_cblock"),
                           F.lit(20)).alias("n")).collect())}
-    got = counts_of(drv)
+
+    drv2 = CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], cfg)
+    assert _footers(drv2.t_inlinks) == [inlink_cols]
+    got = counts_of(drv2)
     assert got, "no candidates in toy crawl"
     for uh, n in got.items():
         assert n == want.get(uh, 0), \
             f"uh48={uh}: got {n} inlinks, want {want.get(uh, 0)}"
 
-    # compaction heals: no NULL first_ip, fully salted, same counts
+    # compaction keeps it: no NULL first_ip, fully salted, same counts
     compaction.compact_frontier(spark, wd)
-    healed = drv.t_inlinks.read(spark)
+    healed = drv2.t_inlinks.read(spark)
     assert healed.filter("first_ip is null or _salt is null").count() == 0
-    assert drv._inlinks_salted(healed)
-    got2 = counts_of(drv)
+    assert _footers(drv2.t_inlinks) == [inlink_cols]
+    got2 = counts_of(drv2)
     assert got2 == got
