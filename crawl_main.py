@@ -10,8 +10,8 @@
 Each round checks its harvested links with one exact anti-join against
 the workdir's url_seen table; --compact-every folds the per-round
 url_seen deltas back into its bucketed base.  Each printed metrics line
-carries ``seen_path`` (``url_seen``, or ``requests_scan`` after a
-streaming ingest wrote requests between compactions).
+carries the round's ``scheduled``/``fetched_ok``/``fetch_errors``/
+``new_urls`` counters.
 
 Packaging:  `python crawl_main.py --make-pyfiles osse.zip` zips the
 package for --py-files.  Resume is automatic: the driver continues from

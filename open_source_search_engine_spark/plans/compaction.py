@@ -18,7 +18,8 @@ C2 window then scans ~1 row per url instead of the whole append log).
 Beside it sits the one-time upgrade of state written by older drivers
 (``upgrade_legacy_state``): the reference's records are fixed-schema
 packed structs (Spider.h:817) and a schema change there is an offline
-step, so here too it is one rewrite at open, never a per-read fix.
+step, so here too it is one rewrite at open, never a per-read fix.  The
+same open step rebuilds a url_seen base that a torn write left stale.
 """
 
 from __future__ import annotations
@@ -30,7 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.snapstore import (
-    SnapshotTable, frontier_table, read_negatives, url_seen_table, with_salt,
+    SnapshotTable, frontier_table, read_negatives, url_seen_synced,
+    url_seen_table, with_salt,
 )
 
 # Salted-frontier group key: the same (first_ip,_salt,uh48) triple the
@@ -186,8 +188,11 @@ def _filled(df: DataFrame, schema: T.StructType) -> DataFrame:
 def upgrade_legacy_state(spark: SparkSession, workdir: str) -> list[str]:
     """Rewrite each frontier table that has a data dir written by an
     older driver into one bucketed snapshot in the current schema, then
-    re-sync url_seen as compaction does; returns the upgraded tables.
-    Current state costs one footer read per data dir and no Spark job.
+    rebuild the url_seen base as compaction does wherever it does not
+    mirror the requests (after an upgrade, a torn ``append_requests`` or
+    a direct requests write); returns the upgraded tables.  Current,
+    synced state costs one footer read per data dir, two manifest reads
+    and no Spark job.
 
     requests/replies take the column defaults above; inlinks written
     before the salted layout take first_ip from the requests' uh48 →
@@ -215,6 +220,6 @@ def upgrade_legacy_state(spark: SparkSession, workdir: str) -> list[str]:
                        F.coalesce(fip, F.col("_fip")).alias("first_ip")))
         inl_t.overwrite(with_salt(inl), {"upgrade": True})
         done.append("inlinks")
-    if done and req_t.exists():
+    if req_t.exists() and not url_seen_synced(workdir):
         _sync_url_seen(workdir, req_t, req_t.read(spark), {"upgrade": True})
     return done

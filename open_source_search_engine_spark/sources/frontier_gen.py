@@ -20,8 +20,14 @@ ZIPF_EXP = 1.1
 def gen_frontier(spark: SparkSession, n: int, seed: int = 42,
                  n_ips: int = N_IPS, partitions: int | None = None
                  ) -> DataFrame:
-    """Rows: url, uh48, first_ip, host, hop_count, added_time_ms,
-    discovery_time_ms, flags..., matching plans/scheduler.REQUEST_SCHEMA."""
+    """Synthetic bench frontier rows: url, uh48, first_ip, host,
+    hop_count, added_time_ms, discovery_time_ms, the seven
+    plans/scheduler.REQUEST_SCHEMA flag columns is_addurl ...
+    parent_is_sitemap with page_num_inlinks, and the packed ``flags``
+    word (``pack_request_flags``).  NOT a REQUEST_SCHEMA row: ``domain``
+    and the seven later flag columns (is_rss ... parent_is_pingserver)
+    are absent, so a loader into crawl state drops ``flags`` and adds
+    those eight."""
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism * 2
     df = spark.range(0, n, 1, partitions)

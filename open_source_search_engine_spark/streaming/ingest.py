@@ -22,9 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import joins, udfs
-from ..sources.snapstore import (
-    frontier_table, seen_parts, url_seen_synced, url_seen_table, with_salt,
-)
+from ..plans.compaction import upgrade_legacy_state
+from ..sources.snapstore import append_requests, seen_parts, with_salt
 
 SEED_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -121,46 +120,29 @@ def run_seed_ingest(spark: SparkSession, seed_dir: str, hostmeta_path: str,
     # one metadata-cheap count at stream setup feeds the broadcast size
     # gate; it is NOT per-trigger work
     n_hosts = hostmeta.count()
-    # the canonical frontier constructor: streaming appends are plain
-    # parquet deltas either way (bucketing re-established at compaction),
-    # but the spec must agree with the batch scheduler's
-    table = frontier_table(workdir, "requests")
-    url_seen = url_seen_table(workdir)
+    # open the store as CrawlDriver does: a url_seen that a torn sink
+    # write left stale is rebuilt before the batch replays
+    upgrade_legacy_state(spark, workdir)
 
     # C1 + C5 per micro-batch, the round's exact seen check: the batch
     # is keyed and deduped on its own (stateless — nothing carries over
-    # between triggers), then anti-joined against each seen part.
-    # Synced, those are the uh48-bucketed url_seen base (the seen side
-    # is not shuffled) and its deltas; after an out-of-band requests
-    # write, the annihilated requests scan, recorded as
-    # `frontier_scanned` in the commit lineage.  Negative keys
-    # (delete_urls) annihilate older rows first, so a deleted url fed
-    # again after its delete is accepted afresh.  A url fed in an
-    # earlier trigger is in url_seen by now, and a replayed batch finds
-    # its own rows there, so a retry appends nothing twice.
+    # between triggers), then anti-joined against each url_seen part
+    # (the uh48-bucketed base — the seen side is not shuffled — and its
+    # deltas).  Negative keys (delete_urls) annihilate older rows first,
+    # so a deleted url fed again after its delete is accepted afresh.  A
+    # url fed in an earlier trigger is in url_seen by now, and a
+    # replayed batch finds its own rows there, so a retry appends
+    # nothing twice.
     def sink(batch_df: DataFrame, batch_id: int):
-        sess = batch_df.sparkSession
-        empty = not table.exists()
-        synced = url_seen_synced(workdir)
         accepted = to_requests(batch_df, hostmeta, n_hosts=n_hosts)
-        for p in seen_parts(sess, workdir):
+        for p in seen_parts(batch_df.sparkSession, workdir):
             accepted = accepted.join(p, "uh48", "left_anti")
         accepted = with_salt(accepted).persist()
         n = accepted.count()
         if n:
-            table.append(accepted, {"stream_batch": batch_id,
-                                    "source": "seed_stream", "rows": n,
-                                    "frontier_scanned": not (synced or
-                                                             empty)})
-            # keep url_seen mirroring requests: a delta when it is
-            # synced, a new base (as seed() writes) when the frontier
-            # was empty; otherwise compaction rebuilds it
-            if synced or empty:
-                (url_seen.overwrite if empty else url_seen.append)(
-                    accepted.select("uh48", F.col("added_time_ms")
-                                    .alias("last_added_ms")),
-                    {"source": "seed_stream", "rows": n,
-                     "synced_requests_snapshot": table.current_snapshot()})
+            append_requests(workdir, accepted,
+                            {"stream_batch": batch_id,
+                             "source": "seed_stream", "rows": n})
         accepted.unpersist()
 
     writer = (seed_stream(spark, seed_dir).writeStream.foreachBatch(sink)

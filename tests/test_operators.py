@@ -195,12 +195,12 @@ def test_streaming_seen_route_skips_frontier_scan(spark, tmp_path,
                                                   monkeypatch):
     """VERDICT r4 Next #8: the ingest sink must NOT scan the requests
     table per micro-batch.  While url_seen mirrors requests, a feed read
-    over several triggers never reads requests and records
-    `frontier_scanned` false; a url fed again in a later trigger is
-    rejected by the exact url_seen check, not by a streaming state
-    store (the query has none), and is not re-appended.  Only after a
-    direct requests write broke the sync does a batch scan requests,
-    and its lineage says so."""
+    over several triggers never reads requests; a url fed again in a
+    later trigger is rejected by the exact url_seen check, not by a
+    streaming state store (the query has none), and is not re-appended.
+    Only after a direct requests write broke the sync does the ingest
+    read requests, once, when it opens the store and rebuilds
+    url_seen."""
     import open_source_search_engine_spark.sources.snapstore as snap
     from open_source_search_engine_spark.sources import synthweb
     from open_source_search_engine_spark.streaming.ingest import (
@@ -242,7 +242,8 @@ def test_streaming_seen_route_skips_frontier_scan(spark, tmp_path,
                   "http://host001.com/brandnew.html"])
     assert reads == [], f"synced feeds must not scan requests: {reads}"
 
-    # a direct requests write breaks the sync: the next batch scans
+    # a direct requests write breaks the sync: the next ingest re-syncs
+    # url_seen at open, its one read of requests
     t.append(orig_read(t, spark).limit(1), {"source": "injected"})
     ingest("s3", ["http://host002.com/after-injection.html"])
     assert len(reads) == 1, reads
@@ -252,10 +253,10 @@ def test_streaming_seen_route_skips_frontier_scan(spark, tmp_path,
     assert urls.count("http://host001.com/fresh/1.html") == 1
     assert "http://host001.com/brandnew.html" in urls
     assert "http://host002.com/after-injection.html" in urls
-    flags = [s["lineage"].get("frontier_scanned")
-             for s in t.manifest()["snapshots"].values()
-             if s["lineage"].get("source") == "seed_stream"]
-    assert flags == [False] * 4 + [True], flags
+    batches = [s for s in t.manifest()["snapshots"].values()
+               if s["lineage"].get("source") == "seed_stream"]
+    assert len(batches) == 5, batches
+    assert snap.url_seen_synced(wd)
 
 
 def test_salted_topk_matches_plain(spark):

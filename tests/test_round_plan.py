@@ -12,6 +12,7 @@ from open_source_search_engine_spark.plans.scheduler import (
     CrawlDriver, path_cgi_col,
 )
 from open_source_search_engine_spark.sources import synthweb
+from open_source_search_engine_spark.sources.snapstore import seen_parts
 
 CFG = CrawlConfig(rounds=2, budget=50, round_ms=600_000)
 
@@ -151,8 +152,7 @@ def test_exact_confirm_uses_url_seen_table(driver, spark):
     may shuffle)."""
     driver.run_round(driver.current_round())  # ensure >=1 round + deltas
     assert driver._url_seen_synced()
-    requests, _, _ = driver._read_state()
-    parts = driver._seen_parts(requests)
+    parts = seen_parts(spark, driver.workdir)
     left = spark.range(0, 50).select(F.col("id").alias("uh48"))
     for p in parts:
         left = left.join(p, "uh48", "left_anti")

@@ -1,10 +1,12 @@
-"""The exact seen set: negative keys, streaming ingest, and the seen path.
+"""The exact seen set: negative keys, streaming ingest, and torn writes.
 
 A url counts as seen iff some stored request of its uh48 outlives the
 uh48's newest negative key (Rdb annihilation, snapstore.annihilate).
 The round checks new links, and the streaming ingest its fed urls, with
-one exact anti-join against the url_seen table (or the requests scan
-after an out-of-band write); both keep url_seen synced.
+one exact anti-join against the url_seen table.  Every requests append
+writes its url_seen keys too (snapstore.append_requests); a write torn
+between the two, or a direct requests write, leaves url_seen stale only
+until the next open rebuilds it.
 """
 
 import json
@@ -16,6 +18,9 @@ from open_source_search_engine_spark.oracle.crawler import CrawlConfig
 from open_source_search_engine_spark.plans.compaction import compact_frontier
 from open_source_search_engine_spark.plans.scheduler import CrawlDriver
 from open_source_search_engine_spark.sources import synthweb
+from open_source_search_engine_spark.sources.snapstore import (
+    SnapshotTable, append_requests, url_seen_table,
+)
 from open_source_search_engine_spark.streaming.ingest import run_seed_ingest
 
 CFG = CrawlConfig(rounds=5, budget=40)
@@ -34,11 +39,13 @@ def _driver(spark, paths, wd):
 
 
 def _seen_keys(drv) -> set:
+    return {r.uh48 for r in drv.url_seen_df().collect()}
+
+
+def _stored_keys(drv) -> set:
+    """The stored request keys, annihilated as every reader sees them."""
     requests, _, _ = drv._read_state()
-    out = set()
-    for p in drv._seen_parts(requests):
-        out |= {r.uh48 for r in p.collect()}
-    return out
+    return {r.uh48 for r in requests.select("uh48").collect()}
 
 
 def _schedule(drv) -> list:
@@ -118,16 +125,17 @@ def test_stream_ingest_accepts_url_fed_after_its_delete(spark, paths,
         [(gone.uh48, t_feed), (kept.uh48, kept.added_time_ms)])
 
 
-def test_round_after_stream_ingest_records_seen_path(spark, paths,
-                                                     tmp_path):
-    """seen_path is "url_seen" while the seen table mirrors requests —
-    also after a streaming ingest, which appends its url_seen delta —
-    "requests_scan" after a direct requests write broke the sync, and
-    "url_seen" again once compaction rebuilt the base; in the returned
-    metrics and in the metrics table."""
+def test_round_after_stream_ingest_and_direct_write(spark, paths,
+                                                    tmp_path):
+    """url_seen mirrors requests after a round and after a streaming
+    ingest, which appends its url_seen delta; a direct requests write
+    leaves it stale until the next open rebuilds the base; the rounds
+    before and after compaction schedule, and the metrics table holds
+    one row per round."""
     wd = str(tmp_path / "state")
     drv = _driver(spark, paths, wd)
-    assert drv.run_round(0)["seen_path"] == "url_seen"
+    drv.run_round(0)
+    assert drv._url_seen_synced()
     before = drv.t_requests.current_snapshot()
     run_seed_ingest(spark, _feed(tmp_path / "feed",
                                  [("http://host001.com/fresh/1.html",
@@ -135,16 +143,93 @@ def test_round_after_stream_ingest_records_seen_path(spark, paths,
                     paths["hostmeta"], wd, str(tmp_path / "ckpt"),
                     once=True)
     assert drv.t_requests.current_snapshot() == before + 1
-    assert drv.run_round(1)["seen_path"] == "url_seen"
+    assert drv._url_seen_synced()
+    drv.run_round(1)
+    assert drv._url_seen_synced()
     requests, _, _ = drv._read_state()
     drv.t_requests.append(requests.limit(1), {"source": "injected"})
-    assert drv.run_round(2)["seen_path"] == "requests_scan"
+    assert not drv._url_seen_synced()
+    drv = CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], CFG)
+    assert drv._url_seen_synced()
+    assert drv.run_round(2)["scheduled"] > 0
     compact_frontier(spark, wd)
-    assert drv.run_round(3)["seen_path"] == "url_seen"
-    got = [(r.round, r.seen_path) for r in
+    assert drv._url_seen_synced()
+    assert drv.run_round(3)["scheduled"] > 0
+    got = [r.round for r in
            drv.t_metrics.read(spark).orderBy("round").collect()]
-    assert got == [(0, "url_seen"), (1, "url_seen"),
-                   (2, "requests_scan"), (3, "url_seen")]
+    assert got == [0, 1, 2, 3]
+
+
+def _tear_url_seen_write(monkeypatch, wd, fired: list) -> None:
+    """Make the first url_seen delta append under ``wd`` raise: a crash
+    between append_requests' requests append and its url_seen write."""
+    seen_dir = url_seen_table(wd).path
+    orig = SnapshotTable.append
+
+    def torn(self, df, metrics=None):
+        if self.path == seen_dir and not fired:
+            fired.append(metrics)
+            raise RuntimeError("crash before the url_seen delta")
+        return orig(self, df, metrics)
+
+    monkeypatch.setattr(SnapshotTable, "append", torn)
+
+
+def test_torn_round_write_resynced_at_open(spark, paths, tmp_path,
+                                           monkeypatch):
+    """A round that crashes after appending its new requests but before
+    their url_seen delta leaves url_seen stale, and later writes keep it
+    marked stale; the next driver open rebuilds it, so the seen set is
+    again exactly the stored keys, deleted ones annihilated."""
+    wd = str(tmp_path / "state")
+    drv = _driver(spark, paths, wd)
+    drv.run_round(0)
+    victim = drv.schedule_df().orderBy("seq").select("url").limit(1)
+    assert drv.delete_urls(victim) == 1
+    before = drv.t_requests.current_snapshot()
+    fired: list = []
+    _tear_url_seen_write(monkeypatch, wd, fired)
+    with pytest.raises(RuntimeError, match="url_seen delta"):
+        drv.run_round(1)
+    monkeypatch.undo()
+    spark.sparkContext.setJobGroup("", "")
+    assert fired and drv.t_requests.current_snapshot() == before + 1
+    assert not drv._url_seen_synced()
+    # a later write on the stale store (say, a retry in the same
+    # process) must not stamp it synced: its delta lacks the torn keys
+    append_requests(wd, drv.t_requests.read(spark).limit(1),
+                    {"source": "retry"})
+    assert not drv._url_seen_synced()
+
+    drv = CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], CFG)
+    assert drv._url_seen_synced()
+    assert _seen_keys(drv) == _stored_keys(drv)
+
+
+def test_torn_ingest_write_resynced_on_restart(spark, paths, tmp_path,
+                                               monkeypatch):
+    """A micro-batch that crashes between its requests append and its
+    url_seen delta fails the query; rerun on the same checkpoint, the
+    ingest rebuilds url_seen before the batch replays, so the replay
+    finds its own rows and every fed url is stored once."""
+    wd = str(tmp_path / "state")
+    drv = _driver(spark, paths, wd)
+    rows = [(f"http://host00{1 + i % 2}.com/fresh/{i}.html", CFG.t0_ms)
+            for i in range(4)]  # known hosts: every url is accepted
+    feed, ckpt = _feed(tmp_path / "feed", rows), str(tmp_path / "ckpt")
+    fired: list = []
+    _tear_url_seen_write(monkeypatch, wd, fired)
+    with pytest.raises(Exception):
+        run_seed_ingest(spark, feed, paths["hostmeta"], wd, ckpt, once=True)
+    assert fired and not drv._url_seen_synced()
+    run_seed_ingest(spark, feed, paths["hostmeta"], wd, ckpt, once=True)
+    monkeypatch.undo()
+
+    assert drv._url_seen_synced()
+    urls = [r.url for r in drv.t_requests.read(spark).collect()]
+    assert all(urls.count(u) == 1 for u, _ in rows), urls
+    assert len(urls) == len(set(urls))
+    assert _seen_keys(drv) == _stored_keys(drv)
 
 
 @pytest.mark.parametrize("seeded", [True, False])
@@ -174,4 +259,4 @@ def test_stream_ingest_keeps_url_seen_synced(spark, paths, tmp_path,
     lin = [s["lineage"] for s in
            drv.t_requests.manifest()["snapshots"].values()
            if s["lineage"].get("source") == "seed_stream"]
-    assert [x["frontier_scanned"] for x in lin] == [False]
+    assert len(lin) == 1

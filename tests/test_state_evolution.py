@@ -98,8 +98,9 @@ def test_legacy_request_snapshot_resume(spark, tmp_path):
     columns (domain + flag bits), a requests dir without _salt, replies
     without content_hash32/new_requests/has_contact_info — is upgraded
     once when a driver opens it and resumes with defaults: no nulls, no
-    AnalysisException.  A second open commits nothing and the upgrade
-    check fires no Spark job."""
+    AnalysisException.  A second open commits nothing and the open step
+    fires no Spark job, both on the upgraded store and after a round has
+    appended its url_seen delta."""
     from pyspark.sql import functions as F
 
     from open_source_search_engine_spark.plans import compaction
@@ -140,19 +141,23 @@ def test_legacy_request_snapshot_resume(spark, tmp_path):
     assert rep.filter("content_hash32 != 0 or new_requests != 0 or "
                       "has_contact_info or _salt is null").count() == 0
 
-    snaps = _state_snapshots(wd)
-    sc = spark.sparkContext
-    sc.setJobGroup("upgrade-check", "second upgrade check")
-    try:
-        assert compaction.upgrade_legacy_state(spark, wd) == []
-    finally:
-        sc.setJobGroup("", "")
-    assert not sc.statusTracker().getJobIdsForGroup("upgrade-check")
-    CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], cfg)
-    assert _state_snapshots(wd) == snaps
+    def assert_open_is_noop(group):
+        assert drv2._url_seen_synced()
+        snaps = _state_snapshots(wd)
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "open check on a current, synced store")
+        try:
+            assert compaction.upgrade_legacy_state(spark, wd) == []
+        finally:
+            sc.setJobGroup("", "")
+        assert not sc.statusTracker().getJobIdsForGroup(group)
+        CrawlDriver(spark, wd, paths["pages"], paths["hostmeta"], cfg)
+        assert _state_snapshots(wd) == snaps
 
+    assert_open_is_noop("upgrade-check")
     m = drv2.run_round(drv2.current_round())
     assert m["scheduled"] > 0
+    assert_open_is_noop("open-check-after-round")
     req = drv2._read_state()[0]
     assert "domain" in req.columns
     assert req.filter("domain is null or is_rss is null").count() == 0

@@ -51,7 +51,7 @@ def main():
     from open_source_search_engine_spark.oracle.crawler import CrawlConfig
     from open_source_search_engine_spark.plans import compaction
     from open_source_search_engine_spark.plans.scheduler import CrawlDriver
-    from open_source_search_engine_spark.sources import synthweb
+    from open_source_search_engine_spark.sources import snapstore, synthweb
 
     tmp = tempfile.mkdtemp(prefix="osse_dump_plans_")
     paths = synthweb.write_corpus(os.path.join(tmp, "corpus"),
@@ -74,7 +74,7 @@ def main():
     # exact-confirm (url_seen) anti-join plan for the new-request path,
     # at the frontier-scale join shape (no broadcast of the seen side)
     left = spark.range(0, 10).select(F.col("id").alias("uh48"))
-    for p in drv._seen_parts(requests):
+    for p in snapstore.seen_parts(spark, os.path.join(tmp, "wd")):
         left = left.join(p, "uh48", "left_anti")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     dump("exact_confirm_anti", left)
